@@ -1,9 +1,10 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs
-each ``queries()[name]`` at sf=0.01 and compares it against the
-matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+``entry(spark)`` is a smoke check; each ``queries()[name]`` is
+compared against the matching ``oracle_sql()[name]`` run on DuckDB
+(row count + schema + order-insensitive value hash), as
+``tools/oracle_check.py`` does locally. Both list the registry in
+registration order.
 
 The real inventory lives in
 ``api_kakfa_spark_airflow_s3_athena_spark.plans.queries``; this module is a thin

@@ -2,49 +2,19 @@
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
 __all__ = ["scratch_name", "require_absent", "materialize_once"]
 
 
 def materialize_once(df: DataFrame) -> DataFrame:
-    """The engine's multi-consumer materialization seam (round-14,
-    VERDICT r13 #9): operators that build a frame read by several
-    downstream branches (unit/hash streams, per-group medians, tf
-    working sets, survivor sets) materialize it here instead of
-    calling ``localCheckpoint`` inline, so the STRATEGY is one knob
-    rather than a per-call-site decision:
-
-    - ``local`` (default): eager ``localCheckpoint`` — fastest, but
-      executor-local and non-replayable on executor loss (the
-      documented trade every call site previously made individually);
-    - ``checkpoint``: eager RELIABLE checkpoint — replayable from the
-      checkpoint dir on executor loss; requires
-      ``spark.sparkContext.setCheckpointDir`` (set one via
-      ``SPARK_GRAFT_CHECKPOINT_DIR`` or session code). This is the
-      100 TB posture when the pipeline doesn't otherwise persist the
-      frame;
-    - ``persist``: ``persist()`` + a count action — keeps lineage
-      (recomputable on block loss) at the cost of re-execution risk,
-      for deployments that forbid checkpoint storage.
-
-    Selected by ``SPARK_GRAFT_MATERIALIZE`` (env), default ``local``.
-    All three produce the same rows; only fault-tolerance and storage
-    targets differ."""
-    mode = os.environ.get("SPARK_GRAFT_MATERIALIZE", "local").lower()
-    if mode == "checkpoint":
-        spark = df.sparkSession
-        if spark.sparkContext._jsc.sc().getCheckpointDir().isEmpty():
-            cdir = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
-            if cdir:
-                spark.sparkContext.setCheckpointDir(cdir)
-        return df.checkpoint(eager=True)
-    if mode == "persist":
-        df = df.persist()
-        df.count()
-        return df
+    """The engine's multi-consumer materialization seam: operators that
+    build a frame read by several downstream branches (unit/hash
+    streams, per-group medians, tf working sets, survivor sets)
+    materialize it here instead of calling ``localCheckpoint`` inline.
+    An eager ``localCheckpoint``: the frame is computed once and its
+    lineage cut, with blocks kept executor-local (not replayable on
+    executor loss) and freed with the session."""
     return df.localCheckpoint(eager=True)
 
 

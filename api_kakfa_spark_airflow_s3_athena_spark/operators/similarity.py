@@ -2228,6 +2228,20 @@ def _sq8_phase1_partials(
     return scan.mapInPandas(score, schema=out_schema)
 
 
+def _reject_null_queries(null_ids: list, fn_name: str) -> None:
+    """Fail loudly on NULL query vectors, naming the query ids: a NULL
+    has no quantized code or probe cell, and numpy would otherwise
+    turn the query matrix ragged (one NULL) or into a 1-D NaN array
+    (all NULL)."""
+    if null_ids:
+        shown = ", ".join(repr(q) for q in sorted(null_ids)[:20])
+        more = f" (+{len(null_ids) - 20} more)" if len(null_ids) > 20 else ""
+        raise ValueError(
+            f"{fn_name}: NULL query vector for query ids {shown}{more}; "
+            "drop or fill them before searching"
+        )
+
+
 def sq8_rerank_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -2284,6 +2298,9 @@ def sq8_rerank_topk(
             f"sq8_rerank_topk got > {max_queries} queries; bound the "
             "query set — phase 1 is O(|Q|·|corpus|) integer ops"
         )
+    _reject_null_queries(
+        [r[0] for r in qrows if r[1] is None], "sq8_rerank_topk"
+    )
     if not qrows:
         # typed empty result (empty-input contract)
         return (
@@ -2408,6 +2425,16 @@ def ivf_sq8_topk(
     import numpy as np
 
     qid_type = queries.schema[query_id].dataType.simpleString()
+    # query-side checks before the index build: the bounded collect of
+    # skinny (id, is-NULL) rows doubles as the query-count guard
+    qflags = (
+        queries.select(F.col(query_id), F.col(vec_col).isNull())
+        .limit(max_queries + 1)
+        .collect()
+    )
+    if len(qflags) > max_queries:
+        raise ValueError(f"ivf_sq8_topk got > {max_queries} queries")
+    _reject_null_queries([r[0] for r in qflags if r[1]], "ivf_sq8_topk")
     if normalize:
         queries = _l2_normalized(
             queries.select(F.col(query_id).alias(query_id), F.col(vec_col)),

@@ -18,6 +18,7 @@ extra scan at 100 TB); never infer.
 
 from __future__ import annotations
 
+import os
 from typing import Iterable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -51,15 +52,16 @@ def table_path(sf_dir: str, name: str) -> str:
     return f"{sf_dir.rstrip('/')}/{name}.parquet"
 
 
-# (applicationId, path, mtime_ns) -> StructType. Round-13: a bare
+# (applicationId, path) -> (mtime_ns, StructType). A bare
 # ``spark.read.parquet`` runs a schema-inference footer job on EVERY
 # call (~160 ms warm on local[32]); the engine's query builders call
 # load_table inside the measured region, so that job both inflates
 # every query and multiplies across the suite. Caching the INFERRED
 # SCHEMA (metadata only — what any catalog/metastore provides) and
-# re-reading with ``.schema(...)`` skips the job; the mtime key
-# invalidates the entry if the file is ever rewritten. Plans and
-# results are identical — only the redundant footer re-read goes.
+# re-reading with ``.schema(...)`` skips the job; a rewritten file
+# (new mtime) re-infers and replaces its entry, so the cache holds one
+# entry per path and session. Plans and results are identical — only
+# the redundant footer re-read goes.
 _SCHEMA_CACHE: dict = {}
 
 
@@ -85,21 +87,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # timestamp semantics (date_trunc/month/hour buckets) must be
     # timezone-stable regardless of who built the session
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    import os as _os
-
-    path = table_path(sf_dir, name)
-    try:
-        mtime = _os.stat(path).st_mtime_ns
-    except OSError:
-        mtime = None
-    key = (spark.sparkContext.applicationId, path, mtime)
-    schema = _SCHEMA_CACHE.get(key) if mtime is not None else None
-    if schema is None:
-        df = spark.read.parquet(path)
-        if mtime is not None:
-            _SCHEMA_CACHE[key] = df.schema
-    else:
-        df = spark.read.schema(schema).parquet(path)
+    df = read_parquet_metacached(spark, table_path(sf_dir, name))
     for f in df.schema.fields:
         if f.name == "ts" and isinstance(f.dataType, T.LongType):
             # integer division: ns values exceed double's 2^53 mantissa
@@ -113,27 +101,25 @@ def read_parquet_metacached(spark: SparkSession, path: str) -> DataFrame:
     """Parquet read with the :data:`_SCHEMA_CACHE` treatment for
     NON-testdata artifact paths (stored models, staged indexes): the
     DATA is re-read on every call — only the inferred StructType is
-    cached, keyed on (applicationId, path, mtime_ns), so repeated reads
-    of the same artifact (e.g. a per-epoch model reload) skip the
+    cached, with the mtime_ns it was inferred at, so repeated reads of
+    the same artifact (e.g. a per-epoch model reload) skip the
     footer-inference job while a rewritten artifact (new mtime)
-    re-infers. For a directory artifact the key is the directory's
-    mtime, which overwrite-mode rewrites touch (files are deleted and
-    recreated); in-place part-file surgery that leaves the directory
-    mtime intact is outside this helper's contract — see ADVICE r13."""
-    import os as _os
-
+    re-infers and replaces the entry. For a directory artifact the
+    mtime is the directory's, which overwrite-mode rewrites touch
+    (files are deleted and recreated); in-place part-file surgery that
+    leaves the directory mtime intact is outside this helper's
+    contract — see ADVICE r13."""
     try:
-        mtime = _os.stat(path).st_mtime_ns
-    except OSError:
-        mtime = None
-    key = (spark.sparkContext.applicationId, path, mtime)
-    schema = _SCHEMA_CACHE.get(key) if mtime is not None else None
-    if schema is None:
-        df = spark.read.parquet(path)
-        if mtime is not None:
-            _SCHEMA_CACHE[key] = df.schema
-        return df
-    return spark.read.schema(schema).parquet(path)
+        mtime = os.stat(path).st_mtime_ns
+    except OSError:  # not a local path: infer every time
+        return spark.read.parquet(path)
+    key = (spark.sparkContext.applicationId, path)
+    hit = _SCHEMA_CACHE.get(key)
+    if hit is not None and hit[0] == mtime:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMA_CACHE[key] = (mtime, df.schema)
+    return df
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names: Optional[Iterable[str]] = None):

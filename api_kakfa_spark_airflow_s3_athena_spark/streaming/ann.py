@@ -44,6 +44,7 @@ are written.
 from __future__ import annotations
 
 import posixpath
+from functools import partial
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -145,35 +146,20 @@ def ann_index_sink(
     vec_col: str = "embedding",
     residual: bool = False,
     available_now: bool = False,
-    epoch_times: dict | None = None,
 ):
     """Start the streaming index-maintenance sink over a streaming
-    DataFrame of ``(id, vector)`` rows. Returns the StreamingQuery.
+    DataFrame of ``(id, vector)`` rows. Returns the StreamingQuery."""
 
-    ``epoch_times``: optional dict filled with per-epoch wall seconds
-    (``{epoch_id: sec}``) — the steady-state per-batch append cost is
-    the number that matters at 100 TB; the bench harness reports it
-    alongside the pipeline total (the ``dedup_ingest_sink``
-    convention)."""
-
-    def apply(batch: DataFrame, epoch_id: int) -> None:
-        import time as _time
-
-        t0 = _time.time()
-        ann_index_batch(
-            batch,
-            epoch_id,
-            centroids_path,
-            books_path,
-            index_path,
-            metrics_path,
-            id_col=id_col,
-            vec_col=vec_col,
-            residual=residual,
-        )
-        if epoch_times is not None:
-            epoch_times[epoch_id] = _time.time() - t0
-
+    apply = partial(
+        ann_index_batch,
+        centroids_path=centroids_path,
+        books_path=books_path,
+        index_path=index_path,
+        metrics_path=metrics_path,
+        id_col=id_col,
+        vec_col=vec_col,
+        residual=residual,
+    )
     writer = (
         df.writeStream.foreachBatch(apply)
         .option("checkpointLocation", checkpoint)

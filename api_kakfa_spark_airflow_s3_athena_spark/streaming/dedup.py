@@ -31,6 +31,7 @@ epoch; compaction of old epochs is `operators/maintenance.py`'s job.
 from __future__ import annotations
 
 import posixpath
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -154,38 +155,23 @@ def dedup_ingest_sink(
     shingle_n: int = 3,
     seed: int = 1,
     available_now: bool = False,
-    epoch_times: dict | None = None,
 ):
     """Start the continuous-ingest dedup sink over a streaming
-    DataFrame of documents. Returns the StreamingQuery.
+    DataFrame of documents. Returns the StreamingQuery."""
 
-    ``epoch_times``: optional dict the sink fills with per-epoch wall
-    seconds (``{epoch_id: sec}``) — the MARGINAL per-batch ingest cost
-    is the number that matters at 100 TB (steady-state cost per crawl
-    snapshot), and a pipeline-total bench row hides it; the bench
-    harness reports both."""
-
-    def apply(batch: DataFrame, epoch_id: int) -> None:
-        import time as _time
-
-        t0 = _time.time()
-        dedup_ingest_batch(
-            batch,
-            epoch_id,
-            index_path,
-            corpus_path,
-            pairs_path,
-            text_col=text_col,
-            id_col=id_col,
-            threshold=threshold,
-            num_hashes=num_hashes,
-            bands=bands,
-            shingle_n=shingle_n,
-            seed=seed,
-        )
-        if epoch_times is not None:
-            epoch_times[epoch_id] = _time.time() - t0
-
+    apply = partial(
+        dedup_ingest_batch,
+        index_path=index_path,
+        corpus_path=corpus_path,
+        pairs_path=pairs_path,
+        text_col=text_col,
+        id_col=id_col,
+        threshold=threshold,
+        num_hashes=num_hashes,
+        bands=bands,
+        shingle_n=shingle_n,
+        seed=seed,
+    )
     writer = (
         df.writeStream.foreachBatch(apply)
         .option("checkpointLocation", checkpoint)

@@ -50,6 +50,7 @@ domain.
 from __future__ import annotations
 
 import posixpath
+from functools import partial
 from typing import Sequence
 
 from pyspark.sql import DataFrame, Window
@@ -163,23 +164,18 @@ def mg_summary_sink(
     store_path: str,
     checkpoint: str,
     available_now: bool = False,
-    epoch_times: dict | None = None,
 ):
     """Start the heavy-hitter summary-maintenance sink over a
     streaming DataFrame of (key cols…, unit) occurrence rows. Returns
-    the StreamingQuery. ``epoch_times`` collects per-epoch wall
-    seconds (the marginal-cost convention the other sinks carry)."""
+    the StreamingQuery."""
 
-    def apply(batch: DataFrame, epoch_id: int) -> None:
-        import time as _time
-
-        t0 = _time.time()
-        mg_summary_batch(
-            batch, epoch_id, key_cols, unit_col, num_counters, store_path
-        )
-        if epoch_times is not None:
-            epoch_times[epoch_id] = _time.time() - t0
-
+    apply = partial(
+        mg_summary_batch,
+        key_cols=key_cols,
+        unit_col=unit_col,
+        num_counters=num_counters,
+        store_path=store_path,
+    )
     writer = (
         df.writeStream.foreachBatch(apply)
         .option("checkpointLocation", checkpoint)

@@ -36,6 +36,7 @@ model never exceeds driver/executor broadcast scale by construction
 from __future__ import annotations
 
 import posixpath
+from functools import partial
 
 from pyspark.sql import DataFrame
 
@@ -82,33 +83,18 @@ def quality_gate_sink(
     id_col: str = "doc_id",
     n_buckets: int = 1024,
     available_now: bool = False,
-    epoch_times: dict | None = None,
 ):
     """Start the streaming quality gate over a streaming DataFrame of
-    documents. Returns the StreamingQuery.
+    documents. Returns the StreamingQuery."""
 
-    ``epoch_times``: optional dict the sink fills with per-epoch wall
-    seconds (``{epoch_id: sec}``) — the marginal per-batch scoring
-    cost is the steady-state number that matters at 100 TB; the bench
-    harness reports it alongside the pipeline total (the same hook
-    ``dedup_ingest_sink`` carries)."""
-
-    def apply(batch: DataFrame, epoch_id: int) -> None:
-        import time as _time
-
-        t0 = _time.time()
-        quality_gate_batch(
-            batch,
-            epoch_id,
-            model_path,
-            scores_path,
-            text_col=text_col,
-            id_col=id_col,
-            n_buckets=n_buckets,
-        )
-        if epoch_times is not None:
-            epoch_times[epoch_id] = _time.time() - t0
-
+    apply = partial(
+        quality_gate_batch,
+        model_path=model_path,
+        scores_path=scores_path,
+        text_col=text_col,
+        id_col=id_col,
+        n_buckets=n_buckets,
+    )
     writer = (
         df.writeStream.foreachBatch(apply)
         .option("checkpointLocation", checkpoint)

@@ -29,6 +29,7 @@ exceeds k hashes per group.
 from __future__ import annotations
 
 import posixpath
+from functools import partial
 from typing import Sequence
 
 from pyspark.sql import DataFrame
@@ -126,23 +127,17 @@ def kmv_sketch_sink(
     store_path: str,
     checkpoint: str,
     available_now: bool = False,
-    epoch_times: dict | None = None,
 ):
     """Start the synopsis-maintenance sink over a streaming DataFrame.
-    Returns the StreamingQuery. ``epoch_times`` collects per-epoch
-    wall seconds (the marginal-cost convention the other sinks
-    carry)."""
+    Returns the StreamingQuery."""
 
-    def apply(batch: DataFrame, epoch_id: int) -> None:
-        import time as _time
-
-        t0 = _time.time()
-        kmv_sketch_batch(
-            batch, epoch_id, group_cols, value_col, k, store_path
-        )
-        if epoch_times is not None:
-            epoch_times[epoch_id] = _time.time() - t0
-
+    apply = partial(
+        kmv_sketch_batch,
+        group_cols=group_cols,
+        value_col=value_col,
+        k=k,
+        store_path=store_path,
+    )
     writer = (
         df.writeStream.foreachBatch(apply)
         .option("checkpointLocation", checkpoint)
@@ -201,20 +196,17 @@ def cms_sketch_sink(
     store_path: str,
     checkpoint: str,
     available_now: bool = False,
-    epoch_times: dict | None = None,
 ):
     """Start the counter-maintenance sink over a streaming DataFrame.
-    Returns the StreamingQuery; ``epoch_times`` collects per-epoch
-    wall seconds (the marginal-cost convention)."""
+    Returns the StreamingQuery."""
 
-    def apply(batch: DataFrame, epoch_id: int) -> None:
-        import time as _time
-
-        t0 = _time.time()
-        cms_sketch_batch(batch, epoch_id, unit_col, width, depth, store_path)
-        if epoch_times is not None:
-            epoch_times[epoch_id] = _time.time() - t0
-
+    apply = partial(
+        cms_sketch_batch,
+        unit_col=unit_col,
+        width=width,
+        depth=depth,
+        store_path=store_path,
+    )
     writer = (
         df.writeStream.foreachBatch(apply)
         .option("checkpointLocation", checkpoint)
@@ -269,19 +261,16 @@ def hll_sketch_sink(
     store_path: str,
     checkpoint: str,
     available_now: bool = False,
-    epoch_times: dict | None = None,
 ):
     """Start the register-maintenance sink; returns the
     StreamingQuery."""
 
-    def apply(batch: DataFrame, epoch_id: int) -> None:
-        import time as _time
-
-        t0 = _time.time()
-        hll_sketch_batch(batch, epoch_id, group_cols, value_col, store_path)
-        if epoch_times is not None:
-            epoch_times[epoch_id] = _time.time() - t0
-
+    apply = partial(
+        hll_sketch_batch,
+        group_cols=group_cols,
+        value_col=value_col,
+        store_path=store_path,
+    )
     writer = (
         df.writeStream.foreachBatch(apply)
         .option("checkpointLocation", checkpoint)
@@ -394,22 +383,19 @@ def adaptive_sample_sink(
     store_path: str,
     checkpoint: str,
     available_now: bool = False,
-    epoch_times: dict | None = None,
     salt: str = ":as",
 ):
     """Start the bounded-sample maintenance sink; returns the
     StreamingQuery."""
 
-    def apply(batch: DataFrame, epoch_id: int) -> None:
-        import time as _time
-
-        t0 = _time.time()
-        adaptive_sample_batch(
-            batch, epoch_id, id_col, keep_cols, cap, store_path, salt=salt
-        )
-        if epoch_times is not None:
-            epoch_times[epoch_id] = _time.time() - t0
-
+    apply = partial(
+        adaptive_sample_batch,
+        id_col=id_col,
+        keep_cols=keep_cols,
+        cap=cap,
+        store_path=store_path,
+        salt=salt,
+    )
     writer = (
         df.writeStream.foreachBatch(apply)
         .option("checkpointLocation", checkpoint)
@@ -466,18 +452,16 @@ def bloom_sink(
     store_path: str,
     checkpoint: str,
     available_now: bool = False,
-    epoch_times: dict | None = None,
 ):
     """Start the filter-maintenance sink; returns the StreamingQuery."""
 
-    def apply(batch: DataFrame, epoch_id: int) -> None:
-        import time as _time
-
-        t0 = _time.time()
-        bloom_sink_batch(batch, epoch_id, key_col, m, n_hashes, store_path)
-        if epoch_times is not None:
-            epoch_times[epoch_id] = _time.time() - t0
-
+    apply = partial(
+        bloom_sink_batch,
+        key_col=key_col,
+        m=m,
+        n_hashes=n_hashes,
+        store_path=store_path,
+    )
     writer = (
         df.writeStream.foreachBatch(apply)
         .option("checkpointLocation", checkpoint)

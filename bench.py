@@ -1,64 +1,24 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
-THREE JSON lines — the full artifact (per-run detail), the compact
-summary (all per-query minima + totals + epoch marginals), and LAST a
-size-fitted headline line guaranteed to fit the driver's recording
-window:
+"""Per-row wall-time benchmark of the registry's headline queries.
 
-    {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
+Runs every HEADLINE row at $SPARK_GRAFT_SF_DIR (default: the sf0.1
+testdata dir) on local[$SPARK_GRAFT_CPUS], $SPARK_GRAFT_BENCH_RUNS
+times each (default 2). A row runs its ``bench_fn`` (the production
+shape) when it has one, else its contract query, and is forced
+end-to-end through the noop sink (full execution, no driver-side
+result transfer). A warmup pays session start-up,
+codegen and first-touch costs before the first measured row.
 
-Round-10 output protocol: the driver records only the last ~2000
-characters of stdout and parses the last COMPLETE JSON line inside
-that window (BENCH_r04-r06 parsed; r07-r09 came back `parsed: null`
-because the final line itself outgrew the window as the benched set
-grew — VERDICT r09 'what's missing' #3). The final line is therefore
-actively FITTED to a 1900-char budget: full per-query map first, then
-2-decimal rounding, then — if still too long — the r01 comparison set
-plus every errored (null) row, which preserves the two things the
-parsed line is load-bearing for (the cross-round headline number and
-the verification ledger's null-demotion) no matter how many rows the
-bench gains. The complete per-query detail always remains in the
-full-artifact line and in BENCH_FULL.json next to this script.
+Prints one JSON line and writes the same object to BENCH_FULL.json
+next to this script:
 
-Each query is forced end-to-end with the noop sink (full execution,
-no driver-side result transfer), timed after a warmup query has paid
-the session/codegen startup cost.
+    {"sf": 0.1, "runs_per_query": 2, "total_sec": ...,
+     "queries": {row: best seconds, or null if the row raised},
+     "query_runs": {row: [seconds of every run]},
+     "stream_epoch_sec": {row: [[seconds per epoch] per run]}}
 
-Round-7 artifact additions (so regressions can't hide in run-to-run
-noise, and scale-representative numbers live in the artifact, not
-just NOTES):
-- ``query_runs``: EVERY run's seconds per query, not just the best —
-  the per-query spread is readable from the artifact alone.
-- ``r01_set_total_worst_sec`` / ``spread_sec``: the headline subtotal
-  under worst runs and its distance from the best — a real ~1 s
-  regression is distinguishable from contention without NOTES.
-- ``exact_jaccard_join_prefix_zipf``: the prefix join benched on a
-  Zipf(s=1)/50k-vocab corpus (the selectivity profile the operator is
-  designed for) next to the hostile driver-corpus row.
-- ``streaming_dedup_epoch_marginal_sec``: per-epoch wall seconds of
-  each streaming_dedup_ingest run — the steady-state per-batch ingest
-  cost that matters at 100 TB, which the 3-epoch pipeline total hides.
-
-Round-8 addition — contention self-defense: when the r01-set
-best-two spread exceeds ``SPREAD_FRAC`` of the subtotal, noisy rows
-are automatically re-run (best-of-3/4) and the artifact carries
-``contended`` + ``escalated_runs`` so a recording taken on a busy
-machine is visibly flagged and self-corrects where possible.
-
-Round-12 addition — regression self-adjudication (VERDICT r11 next
-#3): any benched row whose best time lands >``SUSPECT_FRAC`` above
-the same row in the PRIOR round's recorded artifact (the newest
-BENCH_r*.json next to this script) is automatically re-run once more
-in isolation at the very end of the suite — the position where page
-cache and JVM are maximally warm, the condition the hand-written
-"ambient shift" adjudications used to reconstruct manually. The
-artifact carries ``suspect_rows: {name: {prior, in_suite,
-isolated_warm}}`` so a cross-round regression and its adjudication
-live in the SAME record; isolated_warm close to in_suite means the
-shift is real (or ambient cache pressure), isolated_warm back at the
-prior value means in-suite contention. The isolated re-run is also
-admitted into the row's min (it follows the escalation-run warm-tail
-convention and is listed in escalation_runs).
+``stream_epoch_sec`` holds the streaming rows' per-epoch cost as Spark
+measures it (``StreamingQueryProgress.durationMs.addBatch``), see
+``plans.queries.STREAM_EPOCH_SEC``.
 """
 
 from __future__ import annotations
@@ -71,9 +31,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-# The 17-query set benched since round 1 (the baseline the judge
-# tracks round-over-round)...
-HEADLINE_R01 = [
+HEADLINE = [
     "tpch_q1_pricing_summary",
     "tpch_q3_shipping_priority",
     "revenue_by_nation",
@@ -91,21 +49,10 @@ HEADLINE_R01 = [
     "minhash_near_dup_pairs",
     "ann_cosine_topk",
     "streaming_hourly_counts",
-]
-# ...plus the round-4 incremental-artifact operators (bare-operator
-# bench_fn rows), added in round 5 so their perf is visible
-# round-over-round. `value` stays the ALL-queries total; the JSON also
-# reports the r01-set subtotal so cross-round comparison stays
-# apples-to-apples.
-HEADLINE = HEADLINE_R01 + [
     "delta_dedup_incremental",
     "ann_cosine_topk_ivf_indexed",
     "streaming_dedup_ingest",
     "heavy_hitter_tokens",
-    # round-5 additions. The retired registry twins
-    # simhash_hamming_pairs_arrow / minhash_near_dup_pairs_arrow
-    # (round-13 retire-or-merge wave) keep their bare-operator perf
-    # series via EXTRA_ROWS below, not HEADLINE.
     "semdedup_pairs_arrow",
     "simhash_delta_incremental",
     "keyword_search_bm25",
@@ -116,72 +63,26 @@ HEADLINE = HEADLINE_R01 + [
     "bpe_pair_stats",
     "ngram_lm_perplexity",
     "scd2_point_in_time_join",
-    # round-6 additions. Caveat on the prefix join: the driver's sf0.1
-    # corpus has a 40-word vocabulary, which defeats prefix selectivity
-    # and makes the run OUTPUT-bound (190,925 true pairs at t=0.95) —
-    # the row is honest but measures result volume, not candidate
-    # pruning. Its Zipfian-vocab twin (exact_jaccard_join_prefix_zipf,
-    # round 7) is the scale-representative number; both are reported.
+    # The sf0.1 corpus has a 40-word vocabulary, which defeats prefix
+    # selectivity: this row measures result volume (output-bound), and
+    # its Zipfian-vocab twin exact_jaccard_join_prefix_zipf (EXTRA_ROWS)
+    # measures candidate pruning.
     "exact_jaccard_join_prefix",
-    # hashed-window-key twin of boilerplate_span_coverage (8-byte
-    # xxhash64 keys through the exchanges instead of ~50-char strings;
-    # 144.7 -> 60.8 MB shuffle write at sf1)
     "boilerplate_span_coverage_hashed",
-    # round-7 addition: range join as a bin-key equi-join (no nested
-    # loop); sf1->sf10 ratio 1.6x on the .scale relational fixtures
     "shipdate_window_range_join_binned",
-    # round-7 continuation: first-line canonical dedup key and the
-    # zlib repetition signal — both row-local scan passes
     "canonical_text_dedup",
     "compression_ratio_quality",
-    # round-8 addition: product-quantization ANN (codebooks + encode
-    # + ADC top-k; bare-operator bench_fn, contract in the registry)
     "ann_cosine_topk_pq",
-    # round-8 addition: classifier TRAINING (6 full-batch GD
-    # iterations, one Arrow gradient scan + one 4096-row shuffle
-    # each, quantize + production-path holdout scoring)
     "quality_classifier_training",
-    # round-9 addition: incremental PQ maintenance (bench_fn = encode
-    # the delta batch against the frozen stored codebooks; the
-    # codebook/corpus staging happens on the first of the two runs,
-    # the same convention as the IVF/MinHash/SimHash index rows)
     "ann_pq_delta_append",
-    # round-9 addition: streaming classifier gate (3-epoch pipeline
-    # total; the per-epoch MARGINAL seconds are reported separately
-    # like the streaming-dedup row; model training is session-staged)
     "streaming_quality_gate",
-    # round-9 addition: IVF-PQ composed ANN (bench_fn = index build +
-    # nprobe=4/16 pruned ADC top-10 for 16 queries — the IVFADC
-    # production query path; contract frames live in the registry)
     "ann_cosine_topk_ivfpq",
-    # round-9 addition: k-core membership (iterative peeling; sf0.01
-    # converges in 11 rounds — the bench row is the whole loop)
     "graph_kcore_membership",
-    # round-9 addition: BPE tokenizer (bench_fn = bounded-sample merge
-    # training + one full-corpus Arrow encode pass + token count)
     "bpe_tokenizer_encode",
-    # round-9 additions: 4-round synchronous LPA over the co-purchase
-    # graph. (The two-arm RRF retriever hybrid_search_rrf was merged
-    # into hybrid_search_rrf3 in the round-13 retire-or-merge wave;
-    # its bare timing series continues via EXTRA_ROWS below.)
     "graph_label_propagation",
-    # round-9 addition: composed IVF-PQ delta append (bench_fn = one
-    # Arrow encode + one broadcast cell assignment over the delta
-    # against the reloaded frozen artifacts; staging session-cached)
     "ann_ivfpq_delta_append",
-    # round-9 addition: JL random projection (bench_fn = one Arrow
-    # BLAS matmul pass over the full embeddings table, 64 -> 16)
     "embedding_random_projection",
-    # round-9 addition: contrastive triplet mining over MinHash
-    # candidates (the pairs= injection path — the exact 0.7-floor
-    # join is output-bound on this corpus, NOTES; zipf-twin rule)
     "contrastive_pair_mining",
-    # round-10 additions: the nine promoted round-9 staged operators.
-    # KMV rows time the bare sketch paths (bench_fn; the registry
-    # contracts add exact-calibration passes that exist for the oracle,
-    # not for production); the two streaming rows are 3-epoch pipeline
-    # totals with per-epoch MARGINAL seconds reported separately like
-    # the streaming-dedup row; byte-BPE times train + one Arrow encode.
     "kmv_source_overlap",
     "kmv_overlap_matrix",
     "streaming_kmv_distinct",
@@ -191,20 +92,9 @@ HEADLINE = HEADLINE_R01 + [
     "ann_cosine_topk_ivfpq_residual",
     "bpe_byte_level_encode",
     "containment_decontamination",
-    # round-10 fresh slots: the two-phase containment screen (bench_fn
-    # = screen + exact-on-survivors, no calibration pass) and the
-    # streaming MG heavy-hitter sink (3-epoch pipeline total with
-    # per-epoch marginals, the streaming-dedup convention)
     "kmv_containment_screen",
     "streaming_heavy_hitters",
-    # round-10 fresh slot: residual IVF-PQ streaming maintenance
-    # (3-epoch pipeline total; per-epoch marginals reported)
     "streaming_ann_residual_ingest",
-    # round-11 additions: the twelve promoted round-10 staged operators.
-    # Sketch/quantile rows time the bare operator paths (bench_fn where
-    # the registry contract adds oracle-only calibration); the three
-    # streaming rows are 3-epoch pipeline totals with per-epoch
-    # marginals reported separately (cms/hll/as keys).
     "quantile_sketch_events",
     "weighted_quantiles_doclen",
     "robust_stats_value",
@@ -217,14 +107,6 @@ HEADLINE = HEADLINE_R01 + [
     "streaming_countmin",
     "streaming_hll_distinct",
     "streaming_adaptive_sample",
-    # round-12 additions: the twelve promoted round-11 staged operators.
-    # ANN rows time the bare index+search paths (bench_fn; the registry
-    # contracts add exact-recall calibration that exists for the
-    # oracle); the two streaming rows are 3-epoch pipeline totals with
-    # per-epoch marginals reported separately (qd/bloom keys); the
-    # warehouse-analytics rows (cohorts, transitions, RFM, Gini, CUSUM,
-    # seasonality) are the registry shapes — contract and production
-    # path coincide.
     "quantile_drift_monitor",
     "ann_ivf_sq8",
     "streaming_bloom_decontaminate",
@@ -237,11 +119,6 @@ HEADLINE = HEADLINE_R01 + [
     "event_transition_matrix",
     "rfm_customer_segments",
     "revenue_concentration_gini",
-    # round-13 additions: the twelve promoted staged operators. All are
-    # registry shapes (contract and production path coincide) except
-    # histogram_selectivity_audit and funnel_time_to_convert, whose
-    # global ranks run on quantiles.distributed_rank (rewired off the
-    # serial window before promotion).
     "scd2_user_state_intervals",
     "histogram_selectivity_audit",
     "join_cardinality_bounds",
@@ -256,461 +133,91 @@ HEADLINE = HEADLINE_R01 + [
     "bigram_pmi_topk",
 ]
 
-# The current round's additions — kept in the final fitted stdout line
-# when the full per-query map no longer fits the recorder's window
-# (see _fitted_headline_line). Update per round alongside HEADLINE.
-HEADLINE_LATEST = HEADLINE[HEADLINE.index("scd2_user_state_intervals"):]
-
-# Round-14 (optimization round — no new registry entries, so
-# HEADLINE_LATEST is frozen at the round-13 additions and the fitted
-# line's key set stays a superset of the round-13 parsed line: zero
-# spurious "dropped_from_bench" rows, VERDICT r13 #3). Additionally
-# KEEP the rows this optimization round restructured, so their
-# before/after lands in the parsed artifact rather than only in
-# BENCH_FULL.json (which remains the complete 99-row record, written
-# unconditionally every run). Additions-only: no existing key is ever
-# removed or renamed.
-HEADLINE_R14_OPT = [
-    "streaming_dedup_ingest",
-    "streaming_ann_ingest",
-    "streaming_ann_residual_ingest",
-    "streaming_heavy_hitters",
-    "streaming_countmin",
-    "streaming_kmv_distinct",
-    "streaming_hll_distinct",
-    "ann_sq8_rerank_normalized",
-    "ann_sq8_rerank",
-    "ann_ivf_sq8",
-    "kmv_containment_screen",
-    "contrastive_pair_mining",
-    "delta_dedup_incremental",
-    "quantile_drift_monitor",
-]
-
-# Best-of-N per query: a single-shot timing showed double-digit
-# run-to-run swings on queries whose code hadn't changed (r03->r04
-# doc_fingerprint_dedup +20%); min-of-2 discards GC/compilation noise
-# while keeping the harness fast. Since round 7 every run's time is
-# recorded in the artifact (query_runs), so the noise the min
-# discards is itself measurable.
 RUNS_PER_QUERY = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2"))
-
-# Contention self-defense (round-8 VERDICT #1): BENCH_r07 was recorded
-# on a contended machine and its headline sat ~50% above the clean
-# band; the artifact needed NOTES to be trusted. Now the harness
-# defends itself: when the r01-set spread (sum of second-best minus
-# sum of best run per query) exceeds SPREAD_FRAC of the subtotal, the
-# noisy rows are re-run (up to MAX_EXTRA_PASSES extra runs each, so a
-# contended pair escalates to best-of-3/4), and the artifact carries
-# a `contended` flag either way — a contended record can never again
-# silently become the round's number.
-SPREAD_FRAC = float(os.environ.get("SPARK_GRAFT_BENCH_SPREAD_FRAC", "0.25"))
-MAX_EXTRA_PASSES = int(os.environ.get("SPARK_GRAFT_BENCH_MAX_EXTRA", "2"))
-# per-query noise floor: don't re-run sub-50 ms jitter
-_NOISE_FLOOR_SEC = 0.05
-
-# regression self-adjudication threshold: rows >35% over their prior-
-# round artifact value get an isolated warm re-run (VERDICT r11 #3)
-SUSPECT_FRAC = float(os.environ.get("SPARK_GRAFT_BENCH_SUSPECT_FRAC", "0.35"))
-
-
-def _prior_round_artifact() -> tuple:
-    """(round_number, parsed dict) from the newest recorded round
-    artifact (BENCH_r*.json written by the round driver next to this
-    script); (None, {}) when none exists or it failed to parse.
-    Rounds are sorted NUMERICALLY (lexicographic sort breaks at r100
-    and would misorder BENCH_r9 vs BENCH_r10), and an artifact whose
-    round matches ``SPARK_GRAFT_BENCH_ROUND`` (the in-flight round,
-    when the driver exports it) is excluded so a re-run after the
-    current round's artifact lands never adjudicates against itself."""
-    import glob
-    import re
-
-    root = os.path.dirname(os.path.abspath(__file__))
-    rounds = []
-    for path in glob.glob(os.path.join(root, "BENCH_r*.json")):
-        m = re.search(r"BENCH_r(\d+)\.json$", path)
-        if m:
-            rounds.append((int(m.group(1)), path))
-    inflight = os.environ.get("SPARK_GRAFT_BENCH_ROUND")
-    if inflight and inflight.isdigit():
-        rounds = [rp for rp in rounds if rp[0] != int(inflight)]
-    if not rounds:
-        return None, {}
-    rnum, path = max(rounds)
-    try:
-        with open(path) as fh:
-            data = json.load(fh)
-    except (OSError, ValueError):
-        return None, {}
-    parsed = data.get("parsed") if isinstance(data, dict) else None
-    return rnum, (parsed if isinstance(parsed, dict) else {})
-
-
-def _prior_round_queries() -> dict:
-    """Per-query seconds from the newest prior round artifact."""
-    _, parsed = _prior_round_artifact()
-    queries = parsed.get("queries")
-    return queries if isinstance(queries, dict) else {}
-
-
-def _r01_delta_vs_prior(r01_total: float):
-    """{"prior_round": N, "prior_sec": x, "delta_sec": d, "ratio": r}
-    against the newest prior round artifact's r01-set subtotal, or
-    None when no prior artifact carries one."""
-    rnum, parsed = _prior_round_artifact()
-    prior = parsed.get("r01_set_total_sec")
-    if rnum is None or not isinstance(prior, (int, float)) or prior <= 0:
-        return None
-    return {
-        "prior_round": rnum,
-        "prior_sec": prior,
-        "delta_sec": round(r01_total - prior, 3),
-        "ratio": round(r01_total / prior, 3),
-    }
-
-
-def _is_suspect(in_suite, prior_sec) -> bool:
-    """True when a row's in-suite best landed >SUSPECT_FRAC above its
-    prior-round artifact value — the trigger for the isolated warm
-    adjudication re-run. Sub-noise-floor priors never trip (a 30 ms
-    row doubling is jitter, not a regression)."""
-    return (
-        in_suite is not None
-        and isinstance(prior_sec, (int, float))
-        and not isinstance(prior_sec, bool)
-        and prior_sec > _NOISE_FLOOR_SEC
-        and in_suite > prior_sec * (1 + SUSPECT_FRAC)
-    )
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
-    from api_kakfa_spark_airflow_s3_athena_spark.plans.queries import REGISTRY
+    from api_kakfa_spark_airflow_s3_athena_spark.operators import dedup as DD
+    from api_kakfa_spark_airflow_s3_athena_spark.plans.queries import (
+        REGISTRY,
+        STREAM_EPOCH_SEC,
+        _ensure_pagerank_index,
+        _stage_events_stream,
+    )
     from api_kakfa_spark_airflow_s3_athena_spark.session import local_test_session
+    from api_kakfa_spark_airflow_s3_athena_spark.sources.tables import load_table
+    from tools.scale_check import generate_zipf
 
     spark = local_test_session("bench")
 
-    def _time_once(fn) -> float:
-        # THE timing protocol — initial runs and escalation re-runs
-        # must share one definition so they stay comparable
-        t0 = time.time()
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-        return round(time.time() - t0, 3)
-
-    def run_fn(fn) -> list:
-        return [_time_once(fn) for _ in range(RUNS_PER_QUERY)]
-
-    def run(name: str) -> list:
-        spec = REGISTRY[name]
-        return run_fn(spec.bench_fn or spec.fn)
-
-    # Warmup: pay JVM/codegen startup and per-table first-touch costs
-    # (file listing, footer reads, reader init) outside the
-    # measurement. Each measured query still pays its own codegen.
-    from api_kakfa_spark_airflow_s3_athena_spark.sources.tables import load_table
-
-    REGISTRY["athena_q2_count"].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+    # Warmup: JVM/codegen start-up and per-table first touch (file
+    # listing, footer reads, reader init). Each measured row still
+    # pays its own codegen.
+    REGISTRY["athena_q2_count"].fn(spark, sf_dir).write.format("noop").mode(
+        "overwrite"
+    ).save()
     for table in ("lineitem", "orders", "customer", "nation", "region",
                   "documents", "embeddings", "events"):
         load_table(spark, sf_dir, table).count()
-    # The streaming queries read a staged file-stream copy of `events`
-    # (the sandbox stand-in for a live Kafka topic). Creating that
-    # source is environment setup, not query execution — stage it here
-    # so the measured run times the stream processing itself.
-    from api_kakfa_spark_airflow_s3_athena_spark.plans.queries import _stage_events_stream
-
+    # Environment setup rather than query work: the file-stream copy of
+    # `events` the streaming rows read (the stand-in for a Kafka topic),
+    # the PageRank transition table (a write-once graph snapshot), and
+    # the Zipfian-vocab corpus of exact_jaccard_join_prefix_zipf (same
+    # doc count as the sf0.1 corpus).
     _stage_events_stream(spark, sf_dir)
-    # Likewise the bucketed PageRank transition table: a write-once
-    # graph-snapshot artifact (like the MinHash/SimHash/IVF indexes,
-    # which stage on their bench_fn's first of the two runs) — built
-    # here so the measured row is the warm ITERATION cost the verdict
-    # asked for, not table-build + first-touch.
-    from api_kakfa_spark_airflow_s3_athena_spark.plans.queries import _ensure_pagerank_index
-
     _ensure_pagerank_index(spark, sf_dir)
-    # Zipfian-vocab corpus for the prefix join's representative row
-    # (same doc count as the sf0.1 driver corpus; staging is
-    # environment setup, like the streamed events copy above).
-    from tools.scale_check import generate_zipf
-
-    zipf_dir = tempfile.mkdtemp(prefix="bench_zipf_")
-    generate_zipf(spark, 1, zipf_dir)
-    zipf_docs_path = os.path.join(zipf_dir, "documents.parquet")
-    spark.read.parquet(zipf_docs_path).count()  # first-touch
-
-    from api_kakfa_spark_airflow_s3_athena_spark.operators import dedup as DD
+    zipf_docs_path = os.path.join(
+        tempfile.mkdtemp(prefix="bench_zipf_"), "documents.parquet"
+    )
+    generate_zipf(spark, 1, os.path.dirname(zipf_docs_path))
+    spark.read.parquet(zipf_docs_path).count()
 
     def _zipf_prefix_join(spark, _sf_dir):
         return DD.prefix_jaccard_join(
             spark.read.parquet(zipf_docs_path), threshold=0.95
         )
 
-    # Bare-operator rows for the round-13 retire-or-merge retirements:
-    # the registry twins are gone (their code paths run inside the
-    # merged entries' dual-run), but the perf SERIES stays unbroken by
-    # timing the same bare operators under the same artifact names.
-    from api_kakfa_spark_airflow_s3_athena_spark.operators import retrieval as RET
+    EXTRA_ROWS = {"exact_jaccard_join_prefix_zipf": _zipf_prefix_join}
 
-    EXTRA_ROWS = {
-        "exact_jaccard_join_prefix_zipf": _zipf_prefix_join,
-        "simhash_hamming_pairs_arrow": lambda spark, sf: (
-            DD.simhash_hamming_pairs_arrow(
-                load_table(spark, sf, "documents"), max_distance=3
-            )
-        ),
-        "minhash_near_dup_pairs_arrow": lambda spark, sf: (
-            DD.minhash_dedup_pairs_arrow(
-                load_table(spark, sf, "documents"),
-                threshold=0.5, num_hashes=32, bands=8,
-            )
-        ),
-        "hybrid_search_rrf": lambda spark, sf: RET.hybrid_rrf_topk(
-            load_table(spark, sf, "documents"),
-            load_table(spark, sf, "embeddings"),
-            ["spark", "customer", "slow"],
-            query_vec_id=7, k=10, n_arm=20,
-        ),
-    }
+    def _time_once(fn) -> float:
+        t0 = time.time()
+        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
+        return round(time.time() - t0, 3)
 
-    timings, query_runs = {}, {}
+    queries, query_runs = {}, {}
     for name in HEADLINE + list(EXTRA_ROWS):
-        try:
-            runs = run_fn(EXTRA_ROWS[name]) if name in EXTRA_ROWS else run(name)
-            query_runs[name] = runs
-            timings[name] = min(runs)
-        except Exception as exc:  # a broken query should show up, not hide
-            timings[name] = None
-            print(f"bench error in {name}: {exc}", file=sys.stderr)
-
-    # --- contention self-defense -----------------------------------
-    def _best_two_spread(runs: list) -> float:
-        s = sorted(runs)
-        return (s[1] - s[0]) if len(s) > 1 else 0.0
-
-    def _r01_spread() -> tuple:
-        names = [n for n in HEADLINE_R01 if query_runs.get(n)]
-        best = sum(min(query_runs[n]) for n in names)
-        spread = sum(_best_two_spread(query_runs[n]) for n in names)
-        return best, spread
-
-    def _single_run(name: str) -> float:
         fn = EXTRA_ROWS.get(name)
         if fn is None:
-            spec = REGISTRY[name]
-            fn = spec.bench_fn or spec.fn
-        return _time_once(fn)
-
-    escalated: dict = {}
-    escalation_runs: dict = {}
-    for _pass in range(MAX_EXTRA_PASSES):
-        best, spread = _r01_spread()
-        if spread <= SPREAD_FRAC * best:
-            break
-        # re-run every benched row whose own best-two spread is noisy
-        # (artifact-wide, not just r01 — extra runs are cheap and only
-        # the noisy rows pay them)
-        noisy_rows = [
-            name
-            for name, runs in query_runs.items()
-            if _best_two_spread(runs)
-            > max(SPREAD_FRAC * min(runs), _NOISE_FLOOR_SEC)
-        ]
-        if not any(n in HEADLINE_R01 for n in noisy_rows):
-            # the aggregate tripped but no R01 row did individually
-            # (many small jitters — or the only per-row trips are
-            # non-r01 rows whose first-run index staging reads as
-            # spread): still make progress on the headline metric —
-            # add the r01 rows contributing the most absolute spread,
-            # or the passes would be spent entirely on rows that
-            # cannot move the contended flag (round-8 review finding,
-            # both passes)
-            noisy_rows += sorted(
-                (n for n in HEADLINE_R01 if query_runs.get(n)),
-                key=lambda n: -_best_two_spread(query_runs[n]),
-            )[:5]
-        for name in noisy_rows:
-            runs = query_runs[name]
-            try:
-                t = _single_run(name)
-                runs.append(t)
-                # escalation-pass times recorded separately too: they
-                # execute after the whole suite has warmed the JVM and
-                # page cache, so a best-of-3/4 min drawn from them is
-                # systematically faster than the clean 2-run protocol —
-                # cross-round comparisons need to see which runs are
-                # which (ADVICE r08 #5). query_runs keeps ALL runs in
-                # order (the first runs_per_query entries are the
-                # initial pass), escalation_runs is the warm tail.
-                escalation_runs.setdefault(name, []).append(t)
-                timings[name] = min(runs)
-                escalated[name] = len(runs)
-            except Exception as exc:
-                print(f"bench escalation error in {name}: {exc}", file=sys.stderr)
-    r01_best, r01_spread_final = _r01_spread()
-    contended = r01_spread_final > SPREAD_FRAC * r01_best
-
-    # --- regression self-adjudication (round 12) --------------------
-    # After the whole suite (maximal page-cache/JVM warmth), re-run
-    # each row sitting >SUSPECT_FRAC over its prior-round artifact
-    # value, once, in isolation; record prior/in-suite/isolated side
-    # by side. The isolated time joins the row's run list (warm-tail
-    # convention), so a pure-contention outlier also self-corrects.
-    prior = _prior_round_queries()
-    suspect_rows: dict = {}
-    for name, prior_sec in prior.items():
-        in_suite = timings.get(name)
-        if not _is_suspect(in_suite, prior_sec):
-            continue
+            fn = REGISTRY[name].bench_fn or REGISTRY[name].fn
         try:
-            t = _single_run(name)
-        except Exception as exc:
-            print(f"bench adjudication error in {name}: {exc}", file=sys.stderr)
+            runs = [_time_once(fn) for _ in range(RUNS_PER_QUERY)]
+        except Exception as exc:  # a broken row shows up as null
+            queries[name] = None
+            print(f"bench error in {name}: {exc}", file=sys.stderr)
             continue
-        query_runs[name].append(t)
-        escalation_runs.setdefault(name, []).append(t)
-        timings[name] = min(query_runs[name])
-        suspect_rows[name] = {
-            "prior": prior_sec,
-            "in_suite": in_suite,
-            "isolated_warm": t,
-        }
+        query_runs[name] = runs
+        queries[name] = min(runs)
 
-    from api_kakfa_spark_airflow_s3_athena_spark.plans.queries import (
-        LAST_STREAM_ANN_EPOCH_SEC,
-        LAST_STREAM_ANN_RES_EPOCH_SEC,
-        LAST_STREAM_AS_EPOCH_SEC,
-        LAST_STREAM_BLOOM_EPOCH_SEC,
-        LAST_STREAM_CMS_EPOCH_SEC,
-        LAST_STREAM_DEDUP_EPOCH_SEC,
-        LAST_STREAM_GATE_EPOCH_SEC,
-        LAST_STREAM_HH_EPOCH_SEC,
-        LAST_STREAM_HLL_EPOCH_SEC,
-        LAST_STREAM_KMV_EPOCH_SEC,
-        LAST_STREAM_QD_EPOCH_SEC,
-    )
-
-    total = round(sum(v for v in timings.values() if v is not None), 3)
-    r01_total = round(
-        sum(timings[n] for n in HEADLINE_R01 if timings.get(n) is not None), 3
-    )
-    r01_worst = round(
-        sum(
-            max(query_runs[n])
-            for n in HEADLINE_R01
-            if query_runs.get(n) is not None
-        ),
-        3,
-    )
-    # spread_sec since round 8 = sum over the r01 set of (second-best
-    # minus best) run — the reproducibility of the reported number.
-    # With the historical 2-run pairs second-best == worst, so the
-    # definition is backward-compatible with the r07 artifact; after
-    # an escalation pass it correctly EXCLUDES the discarded contended
-    # outliers (which r01_set_total_worst_sec still exposes).
-    spread_sec = round(r01_spread_final, 3)
-    # `value` is the ROUND-1 SET subtotal — the only number that is
-    # apples-to-apples against BENCH_r01 (the operative baseline; see
-    # BASELINE.md): the headline set has grown every round as new
-    # operators gained bench rows, so the all-set total is NOT
-    # comparable across rounds and is reported separately.
-    summary = {
-        "metric": "headline_r01_set_total_sec",
-        "value": r01_total,
-        "unit": "sec",
-        "queries": timings,
+    artifact = {
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "all_queries_total_sec": total,
-        "r01_set_total_sec": r01_total,
-        # single-source headline narrative (VERDICT r12 #4): the delta
-        # of this run's r01-set subtotal vs the prior ROUND ARTIFACT's
-        # — NOTES quotes this field, never a separate local run.
-        "r01_delta_vs_prior": _r01_delta_vs_prior(r01_total),
-        "r01_set_total_worst_sec": r01_worst,
-        "spread_sec": spread_sec,
-        "contended": contended,
-        "suspect_rows": suspect_rows,
-        "escalated_runs": escalated,
         "runs_per_query": RUNS_PER_QUERY,
-        "streaming_dedup_epoch_marginal_sec": LAST_STREAM_DEDUP_EPOCH_SEC,
-        "streaming_gate_epoch_marginal_sec": LAST_STREAM_GATE_EPOCH_SEC,
-        "streaming_ann_epoch_marginal_sec": LAST_STREAM_ANN_EPOCH_SEC,
-        "streaming_kmv_epoch_marginal_sec": LAST_STREAM_KMV_EPOCH_SEC,
-        "streaming_hh_epoch_marginal_sec": LAST_STREAM_HH_EPOCH_SEC,
-        "streaming_ann_res_epoch_marginal_sec": LAST_STREAM_ANN_RES_EPOCH_SEC,
-        "streaming_cms_epoch_marginal_sec": LAST_STREAM_CMS_EPOCH_SEC,
-        "streaming_hll_epoch_marginal_sec": LAST_STREAM_HLL_EPOCH_SEC,
-        "streaming_as_epoch_marginal_sec": LAST_STREAM_AS_EPOCH_SEC,
-        "streaming_qd_epoch_marginal_sec": LAST_STREAM_QD_EPOCH_SEC,
-        "streaming_bloom_epoch_marginal_sec": LAST_STREAM_BLOOM_EPOCH_SEC,
+        "total_sec": round(sum(v for v in queries.values() if v is not None), 3),
+        "queries": queries,
+        "query_runs": query_runs,
+        "stream_epoch_sec": STREAM_EPOCH_SEC,
     }
-    full = {**summary, "query_runs": query_runs,
-            "escalation_runs": escalation_runs}
-    # Full artifact: one stdout line (historical behavior) plus a file
-    # next to this script, because the driver's recording keeps only a
-    # ~2000-char stdout tail and the full artifact outgrew it in r07.
+    line = json.dumps(artifact)
     try:
         with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
                                "BENCH_FULL.json"), "w") as fh:
-            json.dump(full, fh)
-    except OSError as exc:  # read-only checkout: stdout line still has it
-        print(f"bench: could not write BENCH_FULL.json: {exc}",
-              file=sys.stderr)
-    print(json.dumps(full))
-    print(json.dumps(summary))
-    print(_fitted_headline_line(summary))
+            fh.write(line + "\n")
+    except OSError as exc:  # read-only checkout: the stdout line has it
+        print(f"bench: could not write BENCH_FULL.json: {exc}", file=sys.stderr)
+    print(line)
     spark.stop()
-
-
-# The driver parses the last complete JSON line within a ~2000-char
-# stdout tail; leave slack for the trailing newline and any recorder
-# off-by-a-few. See the module docstring for the degradation ladder.
-_TAIL_BUDGET = int(os.environ.get("SPARK_GRAFT_BENCH_TAIL_BUDGET", "1900"))
-
-
-def _fitted_headline_line(summary: dict, budget: int = None) -> str:
-    budget = _TAIL_BUDGET if budget is None else budget
-    compact = dict(separators=(",", ":"))
-
-    line = json.dumps(summary, **compact)
-    if len(line) <= budget:
-        return line
-
-    def _rounded(queries: dict) -> dict:
-        return {k: (round(v, 2) if isinstance(v, float) else v)
-                for k, v in queries.items()}
-
-    slim = {k: summary[k] for k in (
-        "metric", "value", "unit", "queries", "sf",
-        "all_queries_total_sec", "r01_set_total_sec",
-        "r01_delta_vs_prior", "contended",
-    ) if k in summary}
-    slim["queries"] = _rounded(summary["queries"])
-    line = json.dumps(slim, **compact)
-    if len(line) <= budget:
-        return line
-
-    # Degraded: the r01 comparison set (the cross-round headline
-    # basis) plus the current round's new rows (what this round's
-    # judge most needs to see) plus EVERY null row (an errored query
-    # must stay visible — the verification ledger demotes on parsed
-    # nulls). If even that overflows, drop the new rows too.
-    rounded = _rounded(summary["queries"])
-    for keep in (
-        set(HEADLINE_R01) | set(HEADLINE_LATEST) | set(HEADLINE_R14_OPT),
-        set(HEADLINE_R01) | set(HEADLINE_LATEST),
-        set(HEADLINE_R01),
-    ):
-        slim["queries"] = {
-            k: v for k, v in rounded.items() if k in keep or v is None
-        }
-        slim["queries_truncated_see_full_artifact"] = True
-        line = json.dumps(slim, **compact)
-        if len(line) <= budget:
-            return line
-    return line
 
 
 if __name__ == "__main__":

@@ -475,29 +475,46 @@ def test_sq8_normalize_on_zero_vectors(spark):
     assert all(r.score == r.score for r in rows)  # no NaN
 
 
-def test_all_staged_queries_survive_empty_tables(spark, tmp_path_factory):
-    """Every STAGED entry must run (not crash) against a fixture dir
-    whose tables are all EMPTY — the degenerate corpus every operator
-    eventually meets in production (a fresh partition, a filtered-out
-    source). Contract frames may return a single all-null/zero row;
-    row-producing queries must return zero rows; nothing may raise."""
-    from api_kakfa_spark_airflow_s3_athena_spark.plans.staged import STAGED
-    from api_kakfa_spark_airflow_s3_athena_spark.sources.tables import (
-        TESTDATA_TABLES,
-        load_table,
+
+def _sq8_searches():
+    from api_kakfa_spark_airflow_s3_athena_spark.operators.similarity import (
+        ivf_sq8_topk,
+        sq8_rerank_topk,
     )
 
-    base = str(tmp_path_factory.mktemp("empty_sf"))
-    for t in TESTDATA_TABLES:
-        load_table(spark, "/root/testdata/sf0.001", t).limit(0).write.parquet(
-            f"{base}/{t}.parquet"
-        )
+    return [
+        sq8_rerank_topk,
+        lambda q, c, **kw: ivf_sq8_topk(q, c, n_centroids=2, nprobe=2, **kw),
+    ]
 
-    failures = {}
-    for name, spec in STAGED.items():
-        try:
-            n = spec.fn(spark, base).count()
-            assert n >= 0
-        except Exception as exc:  # collect all, report together
-            failures[name] = repr(exc)[:200]
-    assert not failures, failures
+
+def _untouchable_corpus(spark):
+    """A corpus whose every evaluation raises: the NULL-query check
+    must fire before any corpus work."""
+    from pyspark.sql import functions as F
+
+    return spark.range(3).select(
+        F.col("id").alias("vec_id"),
+        F.raise_error(F.lit("corpus touched"))
+        .cast("array<double>")
+        .alias("embedding"),
+    )
+
+
+def test_sq8_searches_reject_one_null_query_vector(spark):
+    q = spark.createDataFrame(
+        [(10, [1.0, 0.0]), (11, None), (12, [0.0, 1.0])],
+        "query_id long, embedding array<double>",
+    )
+    for search in _sq8_searches():
+        with pytest.raises(ValueError, match=r"NULL query vector .*ids 11;"):
+            search(q, _untouchable_corpus(spark), k=2)
+
+
+def test_sq8_searches_reject_all_null_query_vectors(spark):
+    q = spark.createDataFrame(
+        [(10, None), (11, None)], "query_id long, embedding array<double>"
+    )
+    for search in _sq8_searches():
+        with pytest.raises(ValueError, match=r"NULL query vector .*ids 10, 11;"):
+            search(q, _untouchable_corpus(spark), k=2)

@@ -159,3 +159,20 @@ def test_mg_epoch_fold_gap_fails_loudly(spark, tmp_path):
     mg_summary_batch(batch, 1, ["lang"], "unit", 3, store)
     with pytest.raises(ValueError, match="gap"):
         mg_summary_batch(batch, 4, ["lang"], "unit", 3, store)
+
+
+def test_stream_bench_records_spark_epoch_seconds(spark, sf_dir):
+    """The streaming rows' bench_fn records one positive per-epoch
+    duration (Spark's addBatch) for each of the three staged epochs,
+    keyed by the registry name."""
+    from api_kakfa_spark_airflow_s3_athena_spark.plans.queries import (
+        REGISTRY,
+        STREAM_EPOCH_SEC,
+    )
+
+    name = "streaming_heavy_hitters"
+    STREAM_EPOCH_SEC.pop(name, None)
+    out = REGISTRY[name].bench_fn(spark, sf_dir)
+    assert out.count() > 0
+    (epochs,) = STREAM_EPOCH_SEC[name]
+    assert len(epochs) == 3 and all(sec > 0 for sec in epochs)

@@ -77,3 +77,24 @@ def test_read_table_text_formats_require_schema(spark, tmp_path):
     for fmt in ("json", "csv"):
         with _pytest.raises(ValueError, match="declared schema"):
             read_table(spark, str(tmp_path), fmt=fmt)
+
+
+def test_schema_cache_keeps_one_entry_per_rewritten_path(spark, tmp_path):
+    """A rewritten artifact replaces its cached schema instead of
+    adding an entry: three rewrites of one path leave one entry, and
+    each read sees the schema of the latest write."""
+    import os
+
+    from api_kakfa_spark_airflow_s3_athena_spark.sources import tables
+
+    path = str(tmp_path / "artifact.parquet")
+    for i in range(3):
+        spark.range(2).withColumnRenamed("id", f"c{i}").write.mode(
+            "overwrite"
+        ).parquet(path)
+        os.utime(path, ns=(i + 1, i + 1))  # distinct mtimes, coarse clocks too
+        df = tables.read_parquet_metacached(spark, path)
+        assert df.columns == [f"c{i}"]
+        assert tables.read_parquet_metacached(spark, path).columns == [f"c{i}"]
+    keys = [k for k in tables._SCHEMA_CACHE if k[1] == path]
+    assert keys == [(spark.sparkContext.applicationId, path)]

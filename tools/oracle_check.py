@@ -3,8 +3,7 @@
 Runs every ``queries()`` entry on Spark and, when an oracle exists,
 the twin SQL on DuckDB; compares row count, column names, and an
 order-insensitive value hash (columns sorted by name, values
-stringified, rows sorted). Use while iterating so CORRECTNESS_r{N}
-holds no surprises:
+stringified, rows sorted):
 
     python tools/oracle_check.py [sf_dir] [query ...]
 """
@@ -50,18 +49,13 @@ def frame_fingerprint(cols, rows):
 
 
 def main():
-    args = [a for a in sys.argv[1:] if a != "--staged"]
-    staged = len(args) != len(sys.argv) - 1
+    args = sys.argv[1:]
     sf_dir = args[0] if args and os.path.isdir(args[0]) else "/root/testdata/sf0.01"
     only = set(a for a in args if not os.path.isdir(a))
 
     import duckdb
 
-    if staged:
-        # Round-staged (not yet registered) specs — see plans/staged.py.
-        from api_kakfa_spark_airflow_s3_athena_spark.plans.staged import STAGED as REGISTRY
-    else:
-        from api_kakfa_spark_airflow_s3_athena_spark.plans.queries import REGISTRY
+    from api_kakfa_spark_airflow_s3_athena_spark.plans.queries import REGISTRY
     from api_kakfa_spark_airflow_s3_athena_spark.schemas import TESTDATA_TABLES
     from api_kakfa_spark_airflow_s3_athena_spark.session import local_test_session
 

@@ -57,7 +57,6 @@ AUDIT = [
     "bpe_pair_stats",
     "ngram_lm_perplexity",
     "embedding_pca_whitening",
-    "minhash_near_dup_pairs_arrow",
     "quality_gate_calibrated",
     "event_value_anomalies",
     # round 7 additions: range-join rewrite and reconciliation paths
@@ -82,7 +81,6 @@ AUDIT = [
     # is plan-identical: census + two semi-joins on a localCheckpoint)
     "graph_kcore_membership",
     "ann_cosine_topk_ivfpq",
-    "hybrid_search_rrf",
     "graph_label_propagation",
     "contrastive_pair_mining",
     "bpe_tokenizer_encode",
@@ -107,10 +105,10 @@ AUDIT = [
     "bloom_semijoin_orders",
     "phrase_top_bigram",
     "weighted_quantiles_doclen",
-    # round-12 staged operators (resolved from plans/staged.py until
-    # promotion; quantile_drift_monitor / streaming_bloom_decontaminate
-    # are foreachBatch lifecycles whose per-epoch batch plans are the
-    # adaptive_sample / bloom_bits shapes audited elsewhere)
+    # registered in round 12 (quantile_drift_monitor /
+    # streaming_bloom_decontaminate are foreachBatch lifecycles whose
+    # per-epoch batch plans are the adaptive_sample / bloom_bits shapes
+    # audited elsewhere)
     "ann_ivf_sq8",
     "ann_sq8_rerank_normalized",
     "pii_redaction_stats",
@@ -129,18 +127,11 @@ def main() -> None:
     names = sys.argv[1:] or AUDIT
 
     from api_kakfa_spark_airflow_s3_athena_spark.plans.queries import REGISTRY
-    from api_kakfa_spark_airflow_s3_athena_spark.plans.staged import STAGED
     from api_kakfa_spark_airflow_s3_athena_spark.session import local_test_session
-
-    from tools import retired_ops
 
     spark = local_test_session("plan-audit")
     for name in names:
-        spec = REGISTRY.get(name) or STAGED.get(name)
-        fn = spec.fn if spec is not None else retired_ops.get(name)
-        if fn is None:
-            raise KeyError(name)
-        df = fn(spark, sf_dir)
+        df = REGISTRY[name].fn(spark, sf_dir)
         # materialize so AQE finalizes: the pre-execution adaptive plan
         # carries neither the final join strategies nor codegen spans
         df.collect()

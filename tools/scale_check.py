@@ -57,13 +57,11 @@ HEAVY_OPS = [
     # expression fold pays an expression-tree walk per Gram element);
     # the arrow path below is the production hot path at scale
     "semdedup_pairs_arrow",
-    "simhash_hamming_pairs_arrow",
     "boilerplate_span_coverage",
     "keyword_search_bm25",
     "quality_classifier_scores",
     "doc_chunking_for_embedding",
     "cluster_aware_split",
-    "minhash_near_dup_pairs_arrow",
     "bpe_pair_stats",
     "embedding_pca_whitening",
     "ngram_lm_perplexity",
@@ -71,7 +69,6 @@ HEAVY_OPS = [
     "ann_cosine_topk_ivfpq",
     "ann_ivfpq_delta_append",
     "bpe_tokenizer_encode",
-    "hybrid_search_rrf",
     "embedding_random_projection",
     "multimodal_frame_sample",
     # registered in round 10 (formerly staged; documents/embeddings
@@ -82,17 +79,16 @@ HEAVY_OPS = [
     "ann_cosine_topk_ivfpq_residual",
     "bpe_byte_level_encode",
     "containment_decontamination",
-    # round-11 staged operators (resolved from plans/staged.py until
-    # promotion; documents/embeddings fixtures — the events-based
-    # staged ops (quantile_sketch_events, robust_stats_value) have no
-    # scale fixture here: their scale argument is structural, the
-    # sample filter/sort touches p·n rows)
+    # registered in round 11 (documents/embeddings fixtures — the
+    # events-based ops (quantile_sketch_events, robust_stats_value)
+    # have no scale fixture here: their scale argument is structural,
+    # the sample filter/sort touches p·n rows)
     "countmin_trigram_freq",
     "hll_distinct_trigrams",
     "ngram_novelty_scores",
     "phrase_top_bigram",
     "ann_sq8_rerank",
-    # round-12 staged operators (documents/embeddings fixtures; the
+    # registered in round 12 (documents/embeddings fixtures; the
     # streaming/events-based ones — quantile_drift_monitor,
     # streaming_bloom_decontaminate — are measured on the testdata
     # decade instead, NOTES round 11)
@@ -100,7 +96,7 @@ HEAVY_OPS = [
     "gopher_repetition_filter",
     "ann_ivf_sq8",
     "embedding_isotropy_probe",
-    # round-13 staged operators (documents fixture; the warehouse
+    # registered in round 13 (documents fixture; the warehouse
     # ones — proration, ABC, islands, sweep-line — are relational
     # and live in R5_RELATIONAL_OPS below)
     "bigram_pmi_topk",
@@ -209,28 +205,17 @@ R5_RELATIONAL_OPS = [
     # round 9: co-purchase graph decomposition/communities (lineitem)
     "graph_kcore_membership",
     "graph_label_propagation",
-    # round 12: staged warehouse ops (orders/lineitem/events fixtures)
+    # round 12: warehouse ops (orders/lineitem/events fixtures)
     "order_line_proration",
     "pareto_abc_parts",
     "user_activity_islands",
     "peak_concurrent_activity",
-    # round 12: r14 pre-builds on relational fixtures (events/
-    # lineitem/part; stratified_split_exact and
-    # dedup_canonical_selection read documents — generate() covers)
-    "attribution_last_touch",
-    "woe_iv_value_deciles",
-    "basket_association_rules",
-    "record_linkage_fuzzy_parts",
-    "percentile_cont_quartiles",
     # r12 promotions on the events fixture
     "cusum_changepoint_daily",
     "retention_cohort_matrix",
     "event_transition_matrix",
     "rfm_customer_segments",
     "revenue_concentration_gini",
-    # r14 pre-builds on the orders fixture
-    "seasonal_naive_backtest",
-    "incremental_cube_maintenance",
 ]
 # (the remaining r5 closers — weighted_sample_aes, doc_token_entropy —
 # read the documents fixture, which generate() already covers, as does
@@ -527,7 +512,6 @@ def main() -> None:
     args = ap.parse_args()
 
     from api_kakfa_spark_airflow_s3_athena_spark.plans.queries import REGISTRY
-    from api_kakfa_spark_airflow_s3_athena_spark.plans.staged import STAGED
     from api_kakfa_spark_airflow_s3_athena_spark.session import local_test_session
 
     spark = local_test_session("scale_check")
@@ -591,19 +575,11 @@ def main() -> None:
 
     graph_fns = _graph_fns()
 
-    from tools import retired_ops
-
     def run(name: str, sf_dir: str) -> float:
         if name in graph_fns:
             fn = graph_fns[name]
-        elif retired_ops.get(name) is not None:
-            # names retired by the retire-or-merge waves keep their
-            # bare-operator decade series
-            fn = retired_ops.get(name)
         else:
-            # staged (not-yet-registered) specs resolve too, so new
-            # operators get their scale evidence BEFORE promotion
-            spec = REGISTRY.get(name) or STAGED[name]
+            spec = REGISTRY[name]
             fn = spec.bench_fn or spec.fn
         best = None
         for _ in range(args.runs):
