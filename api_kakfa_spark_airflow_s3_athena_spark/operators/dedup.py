@@ -462,7 +462,7 @@ def _pairs_from_bands(
     groups) before the size filter discards it. ``banded`` is live
     lineage here (a census pre-drop would re-run the whole signature
     pass), so the default stands; the delta path, whose inputs are
-    stored, always pre-drops hot buckets with a count census instead.
+    stored, always pre-drops hot buckets with a count window instead.
     ``guard_hot_buckets=True`` buys the same bound for this path by
     checkpointing the banded frame once (O(n·bands) skinny rows) and
     censusing it before collect — measured +9-18% wall at
@@ -578,21 +578,21 @@ def minhash_dedup_pairs(
     sizing count the ``None`` auto-default pays on derived inputs.
     """
     # Candidate pairs are the small side (O(near-dups), not O(corpus));
-    # cache THEM — they are consumed three times below (id set + both
-    # sides of the verify join).
-    cands = minhash_candidates(
-        df,
-        text_col,
-        id_col,
-        num_hashes,
-        bands,
-        shingle_n,
-        seed,
-        guard_hot_buckets=guard_hot_buckets,
-    ).cache()
-    return _verify_jaccard(
-        cands, df, text_col, id_col, threshold, shingle_n, seed, release=(cands,)
+    # materialize THEM — they are consumed three times below (id set +
+    # both sides of the verify join).
+    cands = materialize_once(
+        minhash_candidates(
+            df,
+            text_col,
+            id_col,
+            num_hashes,
+            bands,
+            shingle_n,
+            seed,
+            guard_hot_buckets=guard_hot_buckets,
+        )
     )
+    return _verify_jaccard(cands, df, text_col, id_col, threshold, shingle_n, seed)
 
 
 def _verify_jaccard(
@@ -603,33 +603,34 @@ def _verify_jaccard(
     threshold: float,
     shingle_n: int,
     seed: int,
-    release: tuple = (),
 ) -> DataFrame:
     """Exact-Jaccard verification of candidate pairs against ``docs``.
 
     Shingle sets are computed ONLY for rows that appear in some
     candidate pair: broadcast the candidate id set so the corpus-side
-    semi-join is a map-side filter (no corpus shuffle), then cache
-    just those rows' shingle sets — nothing corpus-sized is pinned.
-    Shingles are verified as 64-bit hashes (same fold as the signature
-    stream, no string materialization); set Jaccard over the hashed
-    shingles equals the string-shingle Jaccard up to a ~2^-64
-    collision probability.
+    semi-join is a map-side filter (no corpus shuffle), then
+    materialize just those rows' shingle sets — nothing corpus-sized
+    is pinned. Shingles are verified as 64-bit hashes (same fold as
+    the signature stream, no string materialization); set Jaccard over
+    the hashed shingles equals the string-shingle Jaccard up to a
+    ~2^-64 collision probability.
 
-    CACHE HYGIENE (the pagerank pattern): the verified pairs are
-    materialized eagerly (``localCheckpoint``), then the shingle cache
-    plus every caller-cached frame passed via ``release`` is
-    unpersisted — otherwise each invocation strands cached frames in
-    executor storage until LRU eviction. The returned frame is a
-    skinny checkpointed (id_a, id_b, jaccard) result; the operator is
-    therefore eager, like :func:`~..graph.connected_components`.
+    Every multi-consumer frame here — ``cands`` (callers pass it
+    materialized) and the shingle sets, read by both sides of the
+    verify join — is an eager ``materialize_once``: computed by one
+    job each, where a lazy ``.cache()`` under AQE is materialized once
+    PER CONSUMER. Nothing is left in executor storage to unpersist;
+    the local checkpoints are released when their frames are garbage
+    collected. The returned (id_a, id_b, jaccard) frame is the verify
+    join over those two materialized inputs, left lazy: its consumer's
+    own action (a store write, a collect) runs it, so no job
+    checkpoints a result that is read once, and a second action
+    repeats only the joins, never the banding or the shingling.
     """
-    cand_ids = (
-        cands.select(F.col("id_a").alias(id_col))
-        .union(cands.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
-    shingled = (
+    # both ids of every pair, duplicates kept: they only feed a
+    # broadcast semi-join, where a distinct would cost a shuffle job
+    cand_ids = cands.select(F.explode(F.array("id_a", "id_b")).alias(id_col))
+    shingled = materialize_once(
         docs.join(F.broadcast(cand_ids), id_col, "leftsemi")
         # token hashes materialized as their own projection so the
         # shingle zip-chain references an attribute, not 2n copies of
@@ -639,11 +640,10 @@ def _verify_jaccard(
             F.col(id_col),
             F.array_distinct(_shingles_from_th(F.col("th"), shingle_n)).alias("sh"),
         )
-        .cache()
     )
     a = shingled.alias("a")
     b = shingled.alias("b")
-    out = (
+    return (
         cands.join(a, cands.id_a == F.col(f"a.{id_col}"))
         .join(b, cands.id_b == F.col(f"b.{id_col}"))
         .select(
@@ -652,12 +652,7 @@ def _verify_jaccard(
             F.round(jaccard(F.col("a.sh"), F.col("b.sh")), 6).alias("jaccard"),
         )
         .filter(F.col("jaccard") >= threshold)
-        .localCheckpoint(eager=True)
     )
-    shingled.unpersist()
-    for frame in release:
-        frame.unpersist()
-    return out
 
 
 def minhash_delta_dedup_pairs(
@@ -683,20 +678,21 @@ def minhash_delta_dedup_pairs(
     for callers that also persist it — the streaming ingest sink both
     appends the batch's bands to the index store and dedups with
     them, and passing the materialized frame here means ONE signature
-    pass per batch instead of two (round-14, guide §1.2). The caller
-    owns the frame's lifecycle (it is not unpersisted here).
+    pass per batch instead of two (round-14, guide §1.2).
 
     ``index`` is ``minhash_band_index(corpus)`` written once (at scale:
     stored partitioned by ``(band, bucket)``); ``corpus`` supplies text
     only for the exact-Jaccard verify of candidate rows. Per batch:
 
     1. band the DELTA only (the corpus is never re-shingled);
-    2. the delta's distinct ``(band, bucket)`` keys (a tiny set) are
-       BROADCAST against the index — the corpus-sized side is reduced
-       by a map-side filter, no index shuffle, no corpus scan beyond
-       the index files those buckets live in when partitioned;
-    3. the hot-bucket guard censuses only the buckets the delta
-       touches (bounded by |delta| x bands, not the index);
+    2. the delta's ``(band, bucket)`` keys (a tiny set) are
+       BROADCAST into a semi join against the index — the corpus-sized
+       side is reduced by a map-side filter, no index shuffle, no
+       corpus scan beyond the index files those buckets live in when
+       partitioned;
+    3. the hot-bucket guard counts only the buckets the delta touches
+       (bounded by |delta| x bands, not the index), as a window on the
+       same partitioning the candidate aggregation uses;
     4. candidate generation joins the (small, broadcast) delta bands
        against the surviving index slice — pairs must touch the delta
        by construction (delta-delta pairs included: the delta's own
@@ -710,45 +706,39 @@ def minhash_delta_dedup_pairs(
     pinned in tests/test_dedup_similarity.py. Returns distinct
     ``(id_a, id_b, jaccard)``, id_a < id_b.
     """
-    caller_bands = delta_bands is not None
     dband = (
         delta_bands
-        if caller_bands
-        else minhash_band_index(
-            delta, text_col, id_col, num_hashes, bands, shingle_n, seed
-        ).cache()
+        if delta_bands is not None
+        else materialize_once(
+            minhash_band_index(
+                delta, text_col, id_col, num_hashes, bands, shingle_n, seed
+            )
+        )
     )
     all_b = index.select(F.col(id_col), "band", "bucket").withColumn(
         "__delta", F.lit(False)
     ).unionByName(dband.withColumn("__delta", F.lit(True)))
-    dbuckets = dband.select("band", "bucket").distinct()
-    # index slice: only buckets the delta touches survive (map-side
-    # broadcast filter on the corpus-sized side). Candidate generation
-    # stays FUSED with the size guard for everything the aggregate
-    # keeps (round-7: the sf0.1 bench row was many-small-jobs bound),
-    # but buckets over ``max_bucket`` are pre-dropped by a COUNT-only
-    # census so the collect_list never materializes a mega-bucket's
-    # array only to discard it (round-7 review: a delta doc touching a
-    # degenerate million-copy index bucket would otherwise build the
-    # full array in one aggregation buffer — the exact regime the
-    # guard exists for). The census re-reads only STORED inputs (the
-    # index parquet slice + the cached delta bands) — no re-shingling,
-    # unlike a batch-side census, which is why this pass is cheap
-    # here. Hot keys are few by construction, so the anti-join
-    # broadcast is tiny. The slice is checkpointed once (eager, GC-
-    # released) so the census and the collect read the same stored
-    # rows instead of re-running the index join twice.
-    hit = all_b.join(F.broadcast(dbuckets), ["band", "bucket"]).localCheckpoint(
-        eager=True
+    # Index slice: only buckets the delta touches survive — a map-side
+    # broadcast SEMI join on the corpus-sized side. A semi join ignores
+    # duplicate keys, so the delta's (band, bucket) rows are broadcast
+    # as they are, with no distinct (and no shuffle job) in front.
+    hit = all_b.join(
+        F.broadcast(dband.select("band", "bucket")), ["band", "bucket"], "leftsemi"
     )
-    hot = (
-        hit.groupBy("band", "bucket")
-        .agg(F.count(F.lit(1)).alias("__n"))
-        .filter(F.col("__n") > max_bucket)
-        .select("band", "bucket")
-    )
+    # Hot-bucket guard: buckets over ``max_bucket`` are dropped by a
+    # COUNT window before the collect_list, so the aggregation never
+    # materializes a mega-bucket's array only to discard it (a delta
+    # doc touching a degenerate million-copy index bucket would
+    # otherwise build the full array in one aggregation buffer — the
+    # exact regime the guard exists for). The window's row buffer
+    # spills to disk, and the window and the groupBy share one
+    # (band, bucket) hash partitioning, so the census costs no shuffle
+    # of its own and nothing is read twice.
     grouped = (
-        hit.join(F.broadcast(hot), ["band", "bucket"], "left_anti")
+        hit.withColumn(
+            "__n", F.count(F.lit(1)).over(Window.partitionBy("band", "bucket"))
+        )
+        .filter(F.col("__n") <= max_bucket)
         .groupBy("band", "bucket")
         .agg(
             F.collect_list(
@@ -769,11 +759,10 @@ def minhash_delta_dedup_pairs(
             ),
         )
     )
-    cands = (
+    cands = materialize_once(
         grouped.select(F.explode(pairs).alias("p"))
         .select("p.id_a", "p.id_b")
         .distinct()
-        .cache()
     )
     # Delta rows win when a doc_id exists in both stores (re-ingest /
     # update of an existing document): without keying the union the two
@@ -784,16 +773,7 @@ def minhash_delta_dedup_pairs(
     texts = corpus.select(F.col(id_col), F.col(text_col)).join(
         F.broadcast(delta.select(id_col)), id_col, "left_anti"
     ).unionByName(delta.select(F.col(id_col), F.col(text_col)))
-    return _verify_jaccard(
-        cands,
-        texts,
-        text_col,
-        id_col,
-        threshold,
-        shingle_n,
-        seed,
-        release=(cands,) if caller_bands else (cands, dband),
-    )
+    return _verify_jaccard(cands, texts, text_col, id_col, threshold, shingle_n, seed)
 
 
 def simhash(text: Column, bits: int = 64, shingle_n: int = 2, seed: int = 7) -> Column:
@@ -1533,10 +1513,8 @@ def minhash_dedup_pairs_arrow(
         seed=seed,
     )
     banded = _bands_from_sig(sigs, id_col, num_hashes, bands)
-    cands = _pairs_from_bands(banded, id_col, max_bucket).cache()
-    return _verify_jaccard(
-        cands, df, text_col, id_col, threshold, shingle_n, seed, release=(cands,)
-    )
+    cands = materialize_once(_pairs_from_bands(banded, id_col, max_bucket))
+    return _verify_jaccard(cands, df, text_col, id_col, threshold, shingle_n, seed)
 
 
 def _threshold_and_round(pairs_with_j: DataFrame, threshold: float) -> DataFrame:

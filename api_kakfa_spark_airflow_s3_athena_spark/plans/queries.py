@@ -164,7 +164,7 @@ def _stream_bench(name: str, run, out: str, *cols: str) -> QueryFn:
     SQL expressions ``cols`` when given."""
 
     def bench(spark: SparkSession, sf_dir: str) -> DataFrame:
-        base = tempfile.mkdtemp(prefix=f"{name}_bench_")
+        base = _scratch_dir(f"{name}_bench_")
         q = run(spark, sf_dir, base)
         STREAM_EPOCH_SEC.setdefault(name, []).append(
             [
@@ -4666,6 +4666,16 @@ def streaming_static_enrichment(spark, sf_dir):
 
 
 _STAGE_CACHE: Dict[str, str] = {}
+
+
+def _scratch_dir(prefix: str) -> str:
+    """A fresh temp dir that ``_cleanup_stage_dirs`` removes at
+    interpreter exit, for outputs a returned frame still reads lazily
+    (a bench run's stream store, a generated corpus) and that are
+    therefore not removed when the call returns."""
+    path = tempfile.mkdtemp(prefix=prefix)
+    _STAGE_CACHE[path] = path
+    return path
 
 
 def _cleanup_stage_dirs() -> None:

@@ -38,13 +38,15 @@ reads ONLY epoch ``e-1``'s stored state and overwrites its own
 are idempotent and each epoch's state is a readable point-in-time
 snapshot.
 
-Scale shape per micro-batch: one map-side-combined histogram of the
-BATCH only (its distinct (key, unit) domain, bounded by batch size),
-one ≤ ``num_counters·keys``-row merge join, one per-key window over
-the merged summary. State never exceeds ``num_counters`` counters per
-key; at 100 TB the stored state is megabytes while the naive exact
-histogram it stands in for is the full cross-partition distinct
-domain.
+Scale shape per micro-batch: one map-side-combined (key, unit)
+aggregation over the batch rows unioned with the stored summary (≤
+``num_counters·keys`` rows), one per-key window over its result that
+yields the reduction threshold, the batch's unit totals and one meta
+row per key, and one small per-key meta merge — six Spark jobs per
+epoch, pinned by tests/test_epoch_jobs.py. State never exceeds
+``num_counters`` counters per key; at 100 TB the stored state is
+megabytes while the naive exact histogram it stands in for is the
+full cross-partition distinct domain.
 """
 
 from __future__ import annotations
@@ -72,88 +74,86 @@ def mg_summary_batch(
     store_path: str,
 ) -> None:
     """Fold one micro-batch into the running per-key MG summary:
-    exact in-batch histogram, merge with the strictly-earlier epoch's
+    merge the exact in-batch counts into the strictly-earlier epoch's
     stored summary, MG-reduce per key, track the deduction ledger,
     overwrite this epoch's ``summary``/``meta`` directories. A gap in
     the epoch store (predecessor missing while other epochs exist)
     fails loudly instead of silently restarting the fold — the
     sketches-sink discipline (ADVICE r10)."""
+    from ..operators._util import materialize_once
     from .sketches import _prev_epoch_dir
 
     spark = batch.sparkSession
     gcols = list(key_cols)
-    clean = batch.where(F.col(unit_col).isNotNull())
-    # Materialize the in-batch histogram once (bounded: the batch's
-    # distinct (key, unit) domain). Round-14: ``bc`` feeds the merge,
-    # the meta fold AND (via ``ranked``) both reduction outputs — left
-    # lazy, the batch scan + histogram shuffle re-ran per consumer
-    # (guide §1.2: don't recompute subtrees).
-    from ..operators._util import materialize_once
-
-    bc = materialize_once(
-        clean.groupBy(*gcols, unit_col)
-        .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    )
-    # per-key unit total == sum of the histogram's counts — derived
-    # from the materialized histogram, not a second batch scan
-    bmeta = bc.groupBy(*gcols).agg(
-        F.sum("cnt").cast("long").alias("n_units"),
-        F.lit(0).cast("long").alias("deduction"),
+    # Every batch occurrence is a row with cnt = bcnt = 1; the stored
+    # summary enters the same union with bcnt = 0, so ONE (key, unit)
+    # aggregation yields both the merged counter (sum cnt) and the
+    # batch's own count (sum bcnt).
+    one = F.lit(1).cast("long")
+    rows = batch.where(F.col(unit_col).isNotNull()).select(
+        *gcols, unit_col, one.alias("cnt"), one.alias("bcnt")
     )
     prev_sum = _prev_epoch_dir(
         spark, posixpath.join(store_path, "summary"), epoch_id
     )
     if prev_sum is not None:
         # both stores were written by this fold ⇒ schemas known;
-        # declaring them skips two per-epoch footer-inference jobs
-        merged = (
-            spark.read.schema(bc.schema).parquet(prev_sum)
-            .unionByName(bc)
-            .groupBy(*gcols, unit_col)
-            .agg(F.sum("cnt").cast("long").alias("cnt"))
+        # declaring them (here and for the meta read below) skips two
+        # per-epoch footer-inference jobs
+        rows = (
+            spark.read.schema(rows.drop("bcnt").schema)
+            .parquet(prev_sum)
+            .withColumn("bcnt", F.lit(0).cast("long"))
+            .unionByName(rows)
         )
+    merged = rows.groupBy(*gcols, unit_col).agg(
+        F.sum("cnt").alias("cnt"), F.sum("bcnt").alias("bcnt")
+    )
+
+    # MG reduction per key: subtract the (k+1)-th largest count ``t``
+    # from every counter, keep strictly positive — at most k survive
+    # (ties at the boundary reduce to zero and drop, which only shrinks
+    # the state; the error ledger charges the full t either way). One
+    # window partition per key computes ``t`` (nth_value over the full
+    # frame; NULL ⇒ fewer than k+1 counters ⇒ no reduction), the
+    # batch's unit total and a first row that carries both into the
+    # meta fold. The frame is materialized once: the summary and the
+    # meta writes both read it.
+    ordered = Window.partitionBy(*gcols).orderBy(F.desc("cnt"), F.col(unit_col))
+    full = ordered.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
+    ranked = materialize_once(
+        merged.select(
+            *gcols,
+            unit_col,
+            "cnt",
+            F.coalesce(F.nth_value("cnt", num_counters + 1).over(full), F.lit(0))
+            .cast("long")
+            .alias("__t"),
+            F.sum("bcnt").over(full).cast("long").alias("__n_units"),
+            F.row_number().over(ordered).alias("__rn"),
+        )
+    )
+    reduced = ranked.where(F.col("cnt") > F.col("__t")).select(
+        *gcols, unit_col, (F.col("cnt") - F.col("__t")).alias("cnt")
+    )
+    meta = ranked.where(F.col("__rn") == 1).select(
+        *gcols,
+        F.col("__n_units").alias("n_units"),
+        F.col("__t").alias("deduction"),
+    )
+    if prev_sum is not None:
         meta = (
-            spark.read.schema(bmeta.schema)
+            spark.read.schema(meta.schema)
             .parquet(_dir(store_path, "meta", epoch_id - 1))
-            .unionByName(bmeta)
+            .unionByName(meta)
             .groupBy(*gcols)
             .agg(
                 F.sum("n_units").cast("long").alias("n_units"),
                 F.sum("deduction").cast("long").alias("deduction"),
             )
         )
-    else:
-        merged, meta = bc, bmeta
-
-    # MG reduction per key: subtract the (k+1)-th largest count from
-    # every counter, keep strictly positive — at most k survive (ties
-    # at the boundary reduce to zero and drop, which only shrinks the
-    # state; the error ledger charges the full t either way).
-    # ``ranked`` is materialized once (bounded rows): ``t``, ``reduced``
-    # and ``meta_out`` all read it, and lazily each would re-execute
-    # the union+histogram+window subtree per consumer.
-    w = Window.partitionBy(*gcols).orderBy(F.desc("cnt"), F.col(unit_col))
-    ranked = materialize_once(
-        merged.withColumn("__rn", F.row_number().over(w))
-    )
-    t = ranked.where(F.col("__rn") == num_counters + 1).select(
-        *gcols, F.col("cnt").alias("__t")
-    )
-    reduced = (
-        ranked.join(F.broadcast(t), gcols, "left")
-        .withColumn("cnt", F.col("cnt") - F.coalesce(F.col("__t"), F.lit(0)))
-        .where(F.col("cnt") > 0)
-        .select(*gcols, unit_col, "cnt")
-    )
-    meta_out = meta.join(F.broadcast(t), gcols, "left").select(
-        *gcols,
-        "n_units",
-        (F.col("deduction") + F.coalesce(F.col("__t"), F.lit(0))).alias(
-            "deduction"
-        ),
-    )
     reduced.write.mode("overwrite").parquet(_dir(store_path, "summary", epoch_id))
-    meta_out.write.mode("overwrite").parquet(_dir(store_path, "meta", epoch_id))
+    meta.write.mode("overwrite").parquet(_dir(store_path, "meta", epoch_id))
 
 
 def mg_summary_sink(

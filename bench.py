@@ -26,7 +26,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -146,6 +145,7 @@ def main() -> None:
         STREAM_EPOCH_SEC,
         _ensure_pagerank_index,
         _stage_events_stream,
+        _scratch_dir,
     )
     from api_kakfa_spark_airflow_s3_athena_spark.session import local_test_session
     from api_kakfa_spark_airflow_s3_athena_spark.sources.tables import load_table
@@ -170,7 +170,7 @@ def main() -> None:
     _stage_events_stream(spark, sf_dir)
     _ensure_pagerank_index(spark, sf_dir)
     zipf_docs_path = os.path.join(
-        tempfile.mkdtemp(prefix="bench_zipf_"), "documents.parquet"
+        _scratch_dir("bench_zipf_"), "documents.parquet"
     )
     generate_zipf(spark, 1, os.path.dirname(zipf_docs_path))
     spark.read.parquet(zipf_docs_path).count()

@@ -383,6 +383,50 @@ def test_delta_dedup_never_emits_corpus_only_pairs(spark, tmp_path):
     assert got == []  # the 4 corpus dups never surface
 
 
+def test_delta_dedup_hot_bucket_guard_drops_only_hot_pairs(spark):
+    """The delta path's hot-bucket guard: an index bucket with more
+    than ``max_bucket`` members that a delta doc shares is dropped
+    before candidate generation, so pairs that meet only there vanish,
+    while a pair that also meets in another band survives. Index and
+    delta bands are given directly, so the bucket layout is exact; the
+    texts still go through the Jaccard verify."""
+    other = "totally different words about gardens and soil and rain"
+    hot = 777
+    # corpus 1-5 copy BASE, corpus 6 copies `other`; delta 100 copies
+    # BASE, delta 200 copies `other`. All eight share band 0's bucket;
+    # only 6 and 200 also share a band-1 bucket.
+    corpus = spark.createDataFrame(
+        [Row(doc_id=i, text=BASE) for i in range(1, 6)] + [Row(doc_id=6, text=other)]
+    )
+    delta = spark.createDataFrame(
+        [Row(doc_id=100, text=BASE), Row(doc_id=200, text=other)]
+    )
+    schema = "doc_id long, band int, bucket long"
+    index = spark.createDataFrame(
+        [(i, 0, hot) for i in range(1, 7)]
+        + [(i, 1, 1000 + i) for i in range(1, 6)]
+        + [(6, 1, 888)],
+        schema,
+    )
+    delta_bands = spark.createDataFrame(
+        [(100, 0, hot), (100, 1, 1100), (200, 0, hot), (200, 1, 888)], schema
+    )
+
+    def pairs(max_bucket):
+        return {
+            (r.id_a, r.id_b, r.jaccard)
+            for r in DD.minhash_delta_dedup_pairs(
+                delta, corpus, index, threshold=0.5, num_hashes=32, bands=8,
+                max_bucket=max_bucket, delta_bands=delta_bands,
+            ).collect()
+        }
+
+    # uncapped, the hot bucket yields the five BASE copies' pairs too
+    assert pairs(4096) == {(i, 100, 1.0) for i in range(1, 6)} | {(6, 200, 1.0)}
+    # 8 members > 4: the hot bucket is dropped, the band-1 pair stays
+    assert pairs(4) == {(6, 200, 1.0)}
+
+
 def test_ivf_indexed_equals_inline(spark, tmp_path):
     """ivf_topk_from_index over a parquet-persisted index must return
     exactly what the inline ivf_topk computes with the same params —
