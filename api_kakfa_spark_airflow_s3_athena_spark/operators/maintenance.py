@@ -1,11 +1,11 @@
 """Table-maintenance operators: small-file compaction.
 
-Streaming sinks (streaming/pipeline.py) and per-batch upserts write a
-file per micro-batch per partition; at 100 TB a day of micro-batches
-turns the read side into a metadata storm (one task + one open per
-tiny file). Compaction is the standing maintenance job the reference
-delegates to S3 lifecycle + Athena's CTAS advice — here it is a
-first-class operator.
+Per-batch upserts and other incremental writers write a file per
+batch per partition; at 100 TB a day of batches turns the read side
+into a metadata storm (one task + one open per tiny file). Compaction
+is the standing maintenance job the reference delegates to S3
+lifecycle + Athena's CTAS advice — here it is a first-class operator.
+(Structured Streaming file sinks are out of its reach; see below.)
 
 Design (scale-first):
 
@@ -25,6 +25,11 @@ Design (scale-first):
   by partition count, never by data volume); each partition's rewrite
   is an independent distributed job, so a failure mid-run leaves
   every other partition either untouched or fully swapped.
+- Structured Streaming file sinks are refused: readers list a sink's
+  files from its ``_spark_metadata`` log, not from the directory, so
+  a rewrite under the log breaks the sink (the swap deletes the log
+  and the next batch's commit makes the sink unreadable; a rewritten
+  partition leaves the log naming deleted files).
 """
 
 from __future__ import annotations
@@ -36,13 +41,28 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import MapType
 
-__all__ = ["compact_parquet", "plan_compaction", "snapshot_diff"]
+__all__ = ["compact_parquet", "plan_compaction", "reject_streaming_sink", "snapshot_diff"]
 
 
 def _fs(spark: SparkSession, path: str):
     jvm = spark.sparkContext._jvm
     hpath = jvm.org.apache.hadoop.fs.Path(path)
     return hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), hpath, jvm
+
+
+def reject_streaming_sink(spark: SparkSession, path: str) -> None:
+    """Raise ``ValueError`` when ``path``, or a directory above it,
+    carries a streaming file sink's ``_spark_metadata`` log."""
+    fs, d, jvm = _fs(spark, path)
+    d = fs.makeQualified(d)
+    while d is not None:
+        if fs.exists(jvm.org.apache.hadoop.fs.Path(d, "_spark_metadata")):
+            raise ValueError(
+                f"refusing to compact {path}: {d.toString()} is a streaming "
+                "file sink (it has a _spark_metadata log), and rewriting its "
+                "files breaks the sink"
+            )
+        d = d.getParent()
 
 
 def _leaf_dirs(fs, jvm, root) -> List:
@@ -108,7 +128,9 @@ def compact_parquet(
     ``{partitions_seen, partitions_rewritten, files_before, files_after}``.
 
     Already-compact partitions are skipped without reading a byte.
+    Raises ``ValueError`` on a streaming file sink (module docstring).
     """
+    reject_streaming_sink(spark, path)
     fs, _root, jvm = _fs(spark, path)
     plan = plan_compaction(spark, path, target_bytes)
     rewritten = files_before = files_after = 0

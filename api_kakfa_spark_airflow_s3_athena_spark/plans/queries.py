@@ -30,7 +30,8 @@ import os
 import tempfile
 from contextlib import contextmanager
 from dataclasses import dataclass
-from typing import Callable, Dict, Optional, Tuple
+from decimal import Decimal
+from typing import Callable, Dict, NamedTuple, Optional, Tuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -184,24 +185,101 @@ def _stream_bench(name: str, run, out: str, *cols: str) -> QueryFn:
 # produces exact-4-decimal totals whose .XX50 cases land ON the 2-dp
 # rounding boundary, where FP summation order (Spark partials vs DuckDB
 # sequential) decides the direction — a systematic hash-mismatch source
-# at thousands of groups. Casting to DECIMAL first makes every product
-# and sum exact, so rounding is deterministic in both engines. The
-# rounded result is cast back to DOUBLE for schema parity.
+# at thousands of groups. So money is fixed-point: every value is the
+# exact unscaled integer of the oracle's CAST(x AS DECIMAL(p,s)),
+# products multiply those integers, and sums add them exactly; rounding
+# is then deterministic in both engines. The rounded result is cast
+# back to DOUBLE for schema parity.
+#
+# - Per row (``_fixed``): r = rint(x * 10^s) is the unscaled long when
+#   r / 10^s == x and |r| < 10^p, i.e. when x is the double nearest to a
+#   p-digit decimal with s places. That decimal is what the cast yields:
+#   the cast rounds Double.toString(x) HALF_UP, and that string lies
+#   within one ulp of r / 10^s, far inside the rounding margin. Every
+#   other row (1.005, 0.125, NULL, NaN/±inf, out of range) takes the
+#   cast itself, so it rounds, nulls or raises exactly as CAST does. The
+#   fast path skips the cast's Double.toString + BigDecimal per row.
+# - Products multiply longs (10^12 · 10^4 < 2^63). A product whose bound
+#   can leave the long range (three factors) multiplies with overflow
+#   detection and falls back to DECIMAL(38,0) only where it overflows.
+# - Sums add the unscaled integers in a DECIMAL(38,0) buffer, whose
+#   capacity is at least that of every DECIMAL sum it replaces, and
+#   rescale by an exact 10^-s literal once per group.
+#
+# Project the unscaled columns once per row ahead of joins and of
+# aggregates that use them more than once (tpch_q1, revenue_by_nation):
+# a fixed-point expression inlined into several aggregates is evaluated
+# in each of them.
 
-MONEY = "decimal(12,2)"  # prices, balances, event values
-RATE = "decimal(4,2)"    # discounts, taxes (0.00-0.99)
+_SUM = "DECIMAL(38,0)"
 
 
-def _m(col: str):
-    return F.col(col).cast(MONEY)
+class _Fixed(NamedTuple):
+    """A fixed-point value: ``u`` is a SQL expression for its exact
+    unscaled integer at scale ``s``, and ``|u| < bound``. Expressions
+    are composed as SQL text and parsed once (``F.expr``): built
+    through the Column API, with a JVM round trip per node, each value
+    added ~15 ms to every query build (4-core host, sf0.1)."""
+
+    u: str
+    s: int
+    bound: int
+
+    def __mul__(self, o: "_Fixed") -> "_Fixed":
+        bound = self.bound * o.bound
+        if bound <= 2**63:
+            u = f"({self.u} * {o.u})"
+        else:
+            u = (
+                f"coalesce(CAST(try_multiply({self.u}, {o.u}) AS {_SUM}), "
+                f"CAST({self.u} AS {_SUM}) * CAST({o.u} AS {_SUM}))"
+            )
+        return _Fixed(u, self.s + o.s, bound)
+
+    def __radd__(self, k: int) -> "_Fixed":
+        return _Fixed(f"({k * 10**self.s} + {self.u})", self.s, abs(k) * 10**self.s + self.bound)
+
+    def __rsub__(self, k: int) -> "_Fixed":
+        return _Fixed(f"({k * 10**self.s} - {self.u})", self.s, abs(k) * 10**self.s + self.bound)
 
 
-def _r(col: str):
-    return F.col(col).cast(RATE)
+def _fixed(x: str, p: int, s: int) -> _Fixed:
+    """CAST(x AS DECIMAL(p,s)) as its unscaled long; ``x`` is SQL."""
+    r = f"rint(({x}) * {10**s}D)"
+    return _Fixed(
+        f"CASE WHEN {r} / {10**s}D = ({x}) AND abs({r}) < {10**p}D THEN CAST({r} AS BIGINT) "
+        f"ELSE CAST(CAST(({x}) AS DECIMAL({p},{s})) * {10**s} AS BIGINT) END",
+        s,
+        10**p,
+    )
 
 
-def _money_sum(expr, alias: str):
-    return F.round(F.sum(expr), 2).cast("double").alias(alias)
+def _m(x: str) -> _Fixed:
+    """Prices, balances, event values: DECIMAL(12,2)."""
+    return _fixed(x, 12, 2)
+
+
+def _r(x: str) -> _Fixed:
+    """Discounts, taxes: DECIMAL(4,2)."""
+    return _fixed(x, 4, 2)
+
+
+def _unscaled_sum(v: _Fixed):
+    """sum(v) as an exact integer at scale ``v.s``."""
+    return F.expr(f"sum(CAST({v.u} AS {_SUM}))")
+
+
+def _exact_sum_sql(v: _Fixed) -> str:
+    return f"sum(CAST({v.u} AS {_SUM})) * {Decimal(1).scaleb(-v.s):f}BD"
+
+
+def _exact_sum(v: _Fixed):
+    """sum(v) as an exact DECIMAL at scale ``v.s``."""
+    return F.expr(_exact_sum_sql(v))
+
+
+def _money_sum(v: _Fixed, alias: str):
+    return F.expr(f"CAST(round({_exact_sum_sql(v)}, 2) AS DOUBLE)").alias(alias)
 
 
 # =====================================================================
@@ -359,22 +437,28 @@ def athena_q6_partition_pruned_agg(spark, sf_dir):
 def tpch_q1_pricing_summary(spark, sf_dir):
     """TPC-H Q1 pricing summary: the flagship wide aggregation. One
     scan (3 columns pruned from 11), map-side partial aggregation into
-    a tiny final exchange — the canonical shape that survives 100 TB."""
-    li = _t(spark, sf_dir, "lineitem")
-    disc_price = _m("l_extendedprice") * (F.lit(1) - _r("l_discount"))
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            _money_sum(_m("l_extendedprice"), "sum_base_price"),
-            _money_sum(disc_price, "sum_disc_price"),
-            _money_sum(disc_price * (F.lit(1) + _r("l_tax")), "sum_charge"),
-            (F.sum("l_quantity").cast("double") / F.count(F.lit(1))).alias("avg_qty"),
-            (F.sum(_m("l_extendedprice")).cast("double") / F.count(F.lit(1))).alias("avg_price"),
-            (F.sum(_r("l_discount")).cast("double") / F.count(F.lit(1))).alias("avg_disc"),
-            F.count(F.lit(1)).alias("count_order"),
+    a tiny final exchange — the canonical shape that survives 100 TB.
+    The three fixed-point money columns are projected once per row."""
+    ext, disc, tax = _m("l_extendedprice"), _r("l_discount"), _r("l_tax")
+    li = (
+        _t(spark, sf_dir, "lineitem")
+        .filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
+        .select(
+            "l_returnflag", "l_linestatus", "l_quantity",
+            F.expr(ext.u).alias("ext"), F.expr(disc.u).alias("disc"), F.expr(tax.u).alias("tax"),
         )
+    )
+    ext, disc, tax = ext._replace(u="ext"), disc._replace(u="disc"), tax._replace(u="tax")
+    disc_price = ext * (1 - disc)
+    return li.groupBy("l_returnflag", "l_linestatus").agg(
+        F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
+        _money_sum(ext, "sum_base_price"),
+        _money_sum(disc_price, "sum_disc_price"),
+        _money_sum(disc_price * (1 + tax), "sum_charge"),
+        (F.sum("l_quantity").cast("double") / F.count(F.lit(1))).alias("avg_qty"),
+        (_exact_sum(ext).cast("double") / F.count(F.lit(1))).alias("avg_price"),
+        (_exact_sum(disc).cast("double") / F.count(F.lit(1))).alias("avg_disc"),
+        F.count(F.lit(1)).alias("count_order"),
     )
 
 
@@ -405,20 +489,22 @@ def revenue_by_nation(spark, sf_dir):
     + SortMergeJoin against the enriched customer dim; now the only
     fact-side exchange is the 25-key partial-aggregate merge. Customer
     stays estimate-driven (broadcast at small SF, shuffle beyond —
-    AQE decides), same code at every scale. DECIMAL partials re-sum
-    exactly, so results are bit-identical to the one-shot aggregate."""
-    li = _t(spark, sf_dir, "lineitem")
+    AQE decides), same code at every scale. Each fact row carries only
+    (orderkey, unscaled revenue) through the joins; the fixed-point
+    partials re-sum exactly, so results are bit-identical to the
+    one-shot aggregate."""
+    rev = _m("l_extendedprice") * (1 - _r("l_discount"))
+    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", F.expr(rev.u).alias("rev"))
     o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
     r = _t(spark, sf_dir, "region")
     per_nation = (
-        li.select("l_orderkey", "l_extendedprice", "l_discount")
-        .join(o, li.l_orderkey == o.o_orderkey)
+        li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, F.col("o_custkey") == F.col("c_custkey"))
         .groupBy("c_nationkey")
         .agg(
-            F.sum(_m("l_extendedprice") * (F.lit(1) - _r("l_discount"))).alias("__rev"),
+            _exact_sum(rev._replace(u="rev")).alias("__rev"),
             F.count(F.lit(1)).alias("n_lines"),
         )
     )
@@ -653,7 +739,7 @@ def monthly_order_stats(spark, sf_dir):
         .agg(
             F.count(F.lit(1)).alias("n_orders"),
             _money_sum(_m("o_totalprice"), "total_value"),
-            (F.sum(_m("o_totalprice")).cast("double") / F.count(F.lit(1))).alias("avg_value"),
+            (_exact_sum(_m("o_totalprice")).cast("double") / F.count(F.lit(1))).alias("avg_value"),
         )
     )
 
@@ -852,19 +938,23 @@ def tpch_q3_shipping_priority(spark, sf_dir):
     """TPC-H Q3: filtered 3-table join -> grouped revenue -> top 10.
     Filters push below the joins on all three scans; the limit runs as
     top-k on the rounded revenue with key tie-break (deterministic
-    across engines)."""
+    across engines). Lineitem rows carry (orderkey, unscaled revenue)
+    through the joins."""
     c = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey")
     o = _t(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit("1998-03-15").cast("timestamp")
     )
-    li = _t(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") > F.lit("1998-03-15").cast("timestamp")
+    rev = _m("l_extendedprice") * (1 - _r("l_discount"))
+    li = (
+        _t(spark, sf_dir, "lineitem")
+        .filter(F.col("l_shipdate") > F.lit("1998-03-15").cast("timestamp"))
+        .select("l_orderkey", F.expr(rev.u).alias("rev"))
     )
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(c, F.col("o_custkey") == c.c_custkey)
         .groupBy("o_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(_money_sum(_m("l_extendedprice") * (F.lit(1) - _r("l_discount")), "revenue"))
+        .agg(_money_sum(rev._replace(u="rev"), "revenue"))
         .select("o_orderkey", "revenue", "o_orderdate", "o_orderpriority")
         .orderBy(F.col("revenue").desc(), F.col("o_orderkey"))
         .limit(10)
@@ -1117,7 +1207,7 @@ def moving_avg_daily_orders(spark, sf_dir):
     o = _t(spark, sf_dir, "orders")
     daily = o.groupBy(F.date_trunc("day", "o_orderdate").alias("order_day")).agg(
         F.count(F.lit(1)).alias("n_orders"),
-        F.sum(_m("o_totalprice")).cast("double").alias("day_total"),
+        _exact_sum(_m("o_totalprice")).cast("double").alias("day_total"),
     )
     w = Window.orderBy("order_day").rowsBetween(-6, Window.currentRow)
     return daily.select(
@@ -3365,7 +3455,7 @@ def price_band_range_join(spark, sf_dir):
         .groupBy("band")
         .agg(
             F.count(F.lit(1)).alias("n_parts"),
-            (F.sum(_m("p_retailprice")).cast("double") / F.count(F.lit(1))).alias("avg_price"),
+            (_exact_sum(_m("p_retailprice")).cast("double") / F.count(F.lit(1))).alias("avg_price"),
         )
     )
 
@@ -3783,7 +3873,7 @@ def tpch_q10_returned_revenue(spark, sf_dir):
         .join(c, F.col("o_custkey") == c.c_custkey)
         .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
         .groupBy("c_custkey", "c_name", "n_name")
-        .agg(_money_sum(_m("l_extendedprice") * (F.lit(1) - _r("l_discount")), "revenue"))
+        .agg(_money_sum(_m("l_extendedprice") * (1 - _r("l_discount")), "revenue"))
         .orderBy(F.col("revenue").desc(), F.col("c_custkey"))
         .limit(20)
     )
@@ -3867,7 +3957,7 @@ def tpch_q7_volume_shipping(spark, sf_dir):
         .join(F.broadcast(n2), F.col("c_nationkey") == F.col("n2_key"))
         .filter(F.col("supp_nation") < F.col("cust_nation"))
         .groupBy("supp_nation", "cust_nation", F.year("l_shipdate").alias("l_year"))
-        .agg(_money_sum(_m("l_extendedprice") * (F.lit(1) - _r("l_discount")), "revenue"))
+        .agg(_money_sum(_m("l_extendedprice") * (1 - _r("l_discount")), "revenue"))
     )
 
 
@@ -3892,7 +3982,7 @@ def left_join_order_counts(spark, sf_dir):
         .groupBy("c_custkey")
         .agg(
             F.count("o_orderkey").alias("n_orders"),
-            F.round(F.coalesce(F.sum(_m("o_totalprice")), F.lit(0)), 2)
+            F.round(F.coalesce(_exact_sum(_m("o_totalprice")), F.lit(0)), 2)
             .cast("double")
             .alias("total_spent"),
         )
@@ -4133,7 +4223,7 @@ def setop_except_all(spark, sf_dir):
 def tpch_q15_top_supplier(spark, sf_dir):
     """TPC-H Q15: supplier(s) with the quarter's maximum revenue — the
     max-of-aggregate self-comparison. Equality on revenue is safe
-    because the decimal sums are exact; the aggregate is computed once
+    because the fixed-point sums are exact; the aggregate is computed once
     and reused for both the max and the join (no double scan of the
     fact table)."""
     li = _t(spark, sf_dir, "lineitem").filter(
@@ -4141,7 +4231,7 @@ def tpch_q15_top_supplier(spark, sf_dir):
         & (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp"))
     )
     revenue = li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
-        _money_sum(_m("l_extendedprice") * (F.lit(1) - _r("l_discount")), "total_revenue")
+        _money_sum(_m("l_extendedprice") * (1 - _r("l_discount")), "total_revenue")
     )
     max_rev = revenue.agg(F.max("total_revenue").alias("mx"))
     s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
@@ -4182,7 +4272,7 @@ def tpch_q19_disjunctive_predicates(spark, sf_dir):
         | ((F.col("p_type") == "PROMO") & (F.col("l_discount") > 0.05))
     )
     return joined.filter(cond).agg(
-        _money_sum(_m("l_extendedprice") * (F.lit(1) - _r("l_discount")), "revenue"),
+        _money_sum(_m("l_extendedprice") * (1 - _r("l_discount")), "revenue"),
         F.count(F.lit(1)).alias("n_lines"),
     )
 
@@ -4232,19 +4322,22 @@ def tpch_q13_order_distribution(spark, sf_dir):
 )
 def tpch_q14_promo_share(spark, sf_dir):
     """TPC-H Q14: promo revenue share. Conditional / total sums stay
-    exact decimals; only the final ratio drops to double."""
+    exact fixed-point; only the final ratio drops to double."""
     li = _t(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1997-09-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-10-01").cast("timestamp"))
     )
     p = _t(spark, sf_dir, "part").select("p_partkey", "p_type")
-    rev = _m("l_extendedprice") * (F.lit(1) - _r("l_discount"))
+    rev = _m("l_extendedprice") * (1 - _r("l_discount"))
+    li = li.select("l_partkey", F.expr(rev.u).alias("rev"))
+    rev = rev._replace(u="rev")
+    promo = rev._replace(u="CASE WHEN p_type = 'PROMO' THEN rev ELSE 0 END")
     joined = li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
     return joined.agg(
         F.round(
             F.lit(100.0)
-            * F.sum(F.when(F.col("p_type") == "PROMO", rev).otherwise(F.lit(0))).cast("double")
-            / F.sum(rev).cast("double"),
+            * _exact_sum(promo).cast("double")
+            / _exact_sum(rev).cast("double"),
             4,
         ).alias("promo_share_pct")
     )
@@ -5216,7 +5309,7 @@ def bucketed_join_revenue_by_status(spark, sf_dir):
         .groupBy("o_orderstatus")
         .agg(
             F.count(F.lit(1)).alias("n_lines"),
-            _money_sum(_m("l_extendedprice") * (F.lit(1) - _r("l_discount")), "revenue"),
+            _money_sum(_m("l_extendedprice") * (1 - _r("l_discount")), "revenue"),
         )
     )
 
@@ -5303,7 +5396,7 @@ def tpch_q5_local_supplier_volume(spark, sf_dir):
         .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
         .join(F.broadcast(r), F.col("n_regionkey") == F.col("r_regionkey"))
         .groupBy("n_name")
-        .agg(_money_sum(_m("l_extendedprice") * (F.lit(1) - _r("l_discount")), "revenue"))
+        .agg(_money_sum(_m("l_extendedprice") * (1 - _r("l_discount")), "revenue"))
     )
 
 
@@ -5335,7 +5428,7 @@ def tpch_q5_local_supplier_volume(spark, sf_dir):
 def tpch_q8_market_share(spark, sf_dir):
     """TPC-H Q8: national market share — eight-table join, then a
     conditional-sum ratio per order year. Money terms are exact
-    DECIMAL so both sums are exact; the single double division is
+    fixed-point, so both sums are exact; the single double division is
     bit-identical across engines and stays unrounded (see the float
     parity recipe in NOTES.md). Dimensions broadcast; the two facts
     shuffle on orderkey once."""
@@ -5353,7 +5446,7 @@ def tpch_q8_market_share(spark, sf_dir):
         F.col("n_nationkey").alias("n2_key"), F.col("n_name").alias("nation")
     )
     r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "AMERICA")
-    volume = (_m("l_extendedprice") * (F.lit(1) - _r("l_discount"))).alias("volume")
+    volume = _m("l_extendedprice") * (1 - _r("l_discount"))
     joined = (
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .join(o, li.l_orderkey == o.o_orderkey)
@@ -5363,15 +5456,17 @@ def tpch_q8_market_share(spark, sf_dir):
         .join(F.broadcast(r), F.col("n1_region") == F.col("r_regionkey"))
         .join(F.broadcast(n2), F.col("s_nationkey") == F.col("n2_key"))
         .select(
-            F.year("o_orderdate").cast("int").alias("o_year"), volume, F.col("nation")
+            F.year("o_orderdate").cast("int").alias("o_year"),
+            F.expr(volume.u).alias("volume"),
+            F.col("nation"),
         )
     )
-    zero = F.lit(0).cast("decimal(18,4)")
+    volume = volume._replace(u="volume")
+    n3 = volume._replace(u="CASE WHEN nation = 'NATION_3' THEN volume ELSE 0 END")
     return joined.groupBy("o_year").agg(
         (
-            F.sum(F.when(F.col("nation") == "NATION_3", F.col("volume")).otherwise(zero))
-            .cast("double")
-            / F.sum("volume").cast("double")
+            _exact_sum(n3).cast("double")
+            / _exact_sum(volume).cast("double")
         ).alias("mkt_share")
     )
 
@@ -5417,7 +5512,7 @@ def tpch_q17_small_quantity_revenue(spark, sf_dir):
         .filter(F.col("l_quantity") < F.lit(0.2) * F.col("avg_qty"))
         .agg(
             (
-                F.round(F.sum(_m("l_extendedprice")), 2).cast("double") / F.lit(7.0)
+                F.round(_exact_sum(_m("l_extendedprice")), 2).cast("double") / F.lit(7.0)
             ).alias("avg_yearly")
         )
     )
@@ -5568,7 +5663,7 @@ def tpch_q9_product_profit(spark, sf_dir):
     pushed below the join and broadcast (name-LIKE prunes ~2/3 of
     parts); supplier+nation broadcast; lineitem→orders is the one big
     shuffle join, then a partial-aggregated groupBy on (nation, year).
-    DECIMAL money keeps the 2-dp rounding deterministic."""
+    Fixed-point money keeps the 2-dp rounding deterministic."""
     li = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey", "l_suppkey", "l_extendedprice", "l_discount"
     )
@@ -5580,7 +5675,7 @@ def tpch_q9_product_profit(spark, sf_dir):
         .filter(F.col("p_name").like("%red%"))
         .select("p_partkey")
     )
-    profit = _m("l_extendedprice") * (F.lit(1).cast(RATE) - _r("l_discount"))
+    profit = _m("l_extendedprice") * (1 - _r("l_discount"))
     return (
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
         .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
@@ -5630,7 +5725,7 @@ def tpch_q11_important_parts(spark, sf_dir):
     )
     s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     n = _t(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_3")
-    value = _m("l_extendedprice") * (F.lit(1).cast(RATE) - _r("l_discount"))
+    value = _m("l_extendedprice") * (1 - _r("l_discount"))
     pv = (
         li.join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
         .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
@@ -8877,9 +8972,7 @@ def salted_join_segment_events(spark, sf_dir):
         j.groupBy("c_mktsegment")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_events"),
-            F.round(F.sum(F.col("value").cast(MONEY)), 2)
-            .cast("double")
-            .alias("total_value"),
+            _money_sum(_m("value"), "total_value"),
         )
         .withColumnRenamed("c_mktsegment", "segment")
     )
@@ -9505,7 +9598,7 @@ _PROFILE_COLS = ("o_orderkey", "o_custkey", "o_orderstatus",
 
 def _profile_str(c: str):
     if c == "o_totalprice":
-        return lambda agg: agg.cast(MONEY).cast("string")
+        return lambda agg: agg.cast("decimal(12,2)").cast("string")
     if c == "o_orderdate":
         return lambda agg: F.date_format(agg, "yyyy-MM-dd HH:mm:ss.SSSSSS")
     return lambda agg: agg.cast("string")
@@ -12475,24 +12568,25 @@ def _kcs_frames(spark, sf_dir):
 
 def _kcs_exact(screen_rows, evh, trh_raw, keep_keys=None):
     """Exact per-pair containment for the pairs in ``screen_rows``:
-    train postings collapse against the BROADCAST eval vocabulary
-    before their distinct shuffle (the ``containment_join``
-    discipline — eval sets are small by nature), optionally also
-    against the surviving key set, so the exact phase pays corpus
-    cost only where the screen kept a question open."""
+    train postings collapse against the eval vocabulary before their
+    distinct shuffle (the ``containment_join`` discipline), optionally
+    also against the surviving key set, so the exact phase pays corpus
+    cost only where the screen kept a question open.
+
+    The eval side joins without a broadcast hint: the planner
+    broadcasts it while its size estimate is under
+    ``spark.sql.autoBroadcastJoinThreshold`` (eval sets are small by
+    nature, so the train stream never shuffles and the only exchange
+    is the (doc_id, source) rollup) and shuffles both sides once it is
+    not, instead of shipping a large eval side to every executor."""
     ev_vocab = evh.select("h").distinct()
     # trh_raw arrives DISTINCT from _kcs_frames (materialized once);
     # semi-joins preserve distinctness, so no re-distinct shuffle here
-    trh = trh_raw.join(F.broadcast(ev_vocab), "h", "leftsemi")
+    trh = trh_raw.join(ev_vocab, "h", "leftsemi")
     if keep_keys is not None:
         trh = trh.join(F.broadcast(keep_keys), "source", "leftsemi")
     inter = (
-        # broadcast the eval side (small by nature — the same asymmetry
-        # containment_join exploits): the former shuffle join exchanged
-        # BOTH unit streams by h; now the train stream never shuffles
-        # and the only exchange left is the (doc_id, source) rollup
-        # (round-14, guide §2.4)
-        trh.join(F.broadcast(evh), "h")
+        trh.join(evh, "h")
         .groupBy("doc_id", "source")
         .agg(F.count(F.lit(1)).cast("long").alias("n_inter"))
     )
@@ -13759,12 +13853,9 @@ def bloom_semijoin_orders(spark, sf_dir):
         .crossJoin(cand.agg(F.count(F.lit(1)).cast("long").alias("n_candidates")))
         .crossJoin(exact.agg(F.count(F.lit(1)).cast("long").alias("n_exact")))
     )
-    money = F.round(F.sum(F.col("o_totalprice").cast("decimal(12,2)")), 2).cast(
-        "double"
-    )
     per = exact.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).cast("long").alias("n_orders"),
-        money.alias("total_value"),
+        _money_sum(_m("o_totalprice"), "total_value"),
     )
     return per.crossJoin(F.broadcast(stats)).select(
         "o_orderpriority",
@@ -15437,7 +15528,7 @@ def cusum_changepoint_daily(spark, sf_dir):
     ``S_0 = 0`` — omitting the 0 understates the statistic whenever
     every prefix sum is positive), so two ordered windows compute the
     whole statistic —
-    no recursion, no FP anywhere (revenue exact in DECIMAL cents, the
+    no recursion, no FP anywhere (revenue exact in integer cents, the
     reference level ``1.5·μ_pre`` by integer division).
 
     Falsifiable alarm contract: revenue is DOUBLED from {cut} on (the
@@ -15457,11 +15548,7 @@ def cusum_changepoint_daily(spark, sf_dir):
         _t(spark, sf_dir, "orders")
         .groupBy(F.col("o_orderdate").cast("date").alias("day"))
         .agg(
-            F.round(
-                F.sum(F.col("o_totalprice").cast("decimal(12,2)")) * 100, 0
-            )
-            .cast("long")
-            .alias("cents")
+            _unscaled_sum(_m("o_totalprice")).cast("long").alias("cents")
         )
     )
     planted = daily.select(
@@ -15719,7 +15806,7 @@ def event_transition_matrix(spark, sf_dir):
 def rfm_customer_segments(spark, sf_dir):
     """RFM segmentation (the classic CRM/warehouse scoring): per
     customer, recency (days since last order, vs the corpus max
-    date), frequency (order count), monetary (exact DECIMAL cents);
+    date), frequency (order count), monetary (exact integer cents);
     each scored into quintiles equal to ``ntile(5)`` under a FULLY
     DETERMINISTIC order (metric, custkey) — ntile's equal-bucket
     rule is engine-identical given a total order, so the 5x5x5
@@ -15742,11 +15829,7 @@ def rfm_customer_segments(spark, sf_dir):
         .agg(
             F.max(F.col("o_orderdate").cast("date")).alias("lastd"),
             F.count(F.lit(1)).cast("long").alias("frequency"),
-            F.round(
-                F.sum(F.col("o_totalprice").cast("decimal(12,2)")) * 100, 0
-            )
-            .cast("long")
-            .alias("monetary_cents"),
+            _unscaled_sum(_m("o_totalprice")).cast("long").alias("monetary_cents"),
         )
         .crossJoin(F.broadcast(mx))
         .select(
@@ -15860,7 +15943,7 @@ def revenue_concentration_gini(spark, sf_dir):
     arithmetic — no percentile interpolation) plus the Gini
     coefficient via the sorted-series identity
     ``G = (2·Σ i·x_i − (n+1)·Σx) / (n·Σx)`` — integer numerators in
-    exact DECIMAL cents, one rounded division per output.
+    exact integer cents, one rounded division per output.
 
     Scale shape: per-customer aggregate at the scan, then a
     DISTRIBUTED rank over the CUSTOMER dimension
@@ -15876,11 +15959,7 @@ def revenue_concentration_gini(spark, sf_dir):
         _t(spark, sf_dir, "orders")
         .groupBy("o_custkey")
         .agg(
-            F.round(
-                F.sum(F.col("o_totalprice").cast("decimal(12,2)")) * 100, 0
-            )
-            .cast("long")
-            .alias("cents")
+            _unscaled_sum(_m("o_totalprice")).cast("long").alias("cents")
         )
         .localCheckpoint(eager=True)
     )
@@ -16428,7 +16507,7 @@ def weekday_seasonality_index(spark, sf_dir):
     time-series profile behind staffing/capacity dashboards): per
     weekday, the mean daily revenue and its index against the overall
     daily mean in integer BASIS POINTS (mean·10000 // μ — no FP
-    anywhere: exact DECIMAL cents and integer division). Weekday is
+    anywhere: exact integer cents and integer division). Weekday is
     days-since-a-known-Monday mod 7 — pure date arithmetic, because
     ``dayofweek()`` NUMBERING differs between engines (Spark 1=Sunday,
     DuckDB 0=Sunday) and is exactly the kind of silent divergence the
@@ -16440,11 +16519,7 @@ def weekday_seasonality_index(spark, sf_dir):
         _t(spark, sf_dir, "orders")
         .groupBy(F.col("o_orderdate").cast("date").alias("day"))
         .agg(
-            F.round(
-                F.sum(F.col("o_totalprice").cast("decimal(12,2)")) * 100, 0
-            )
-            .cast("long")
-            .alias("cents")
+            _unscaled_sum(_m("o_totalprice")).cast("long").alias("cents")
         )
     )
     tagged = daily.select(
@@ -16671,7 +16746,7 @@ def order_line_proration(spark, sf_dir):
     floor shares ``(T·w_i) div ΣW`` first, then the leftover
     ``T − Σfloor`` cents go one each to the lines with the largest
     integer remainders (ties by line number). ALL-INTEGER: weights
-    and totals are exact DECIMAL cents, shares are integer div/mod —
+    and totals are exact integer cents, shares are integer div/mod —
     no FP anywhere, so the per-order invariant ``Σalloc == T`` is a
     falsifiable boolean (min over orders) in both engines, not an
     epsilon test.
@@ -16683,16 +16758,12 @@ def order_line_proration(spark, sf_dir):
     w = _t(spark, sf_dir, "lineitem").select(
         "l_orderkey",
         "l_linenumber",
-        F.round(F.col("l_extendedprice").cast("decimal(12,2)") * 100, 0)
-        .cast("long")
-        .alias("w"),
+        F.expr(_m("l_extendedprice").u).alias("w"),
     )
     t = _t(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderpriority",
-        F.round(F.col("o_totalprice").cast("decimal(12,2)") * 100, 0)
-        .cast("long")
-        .alias("t_cents"),
+        F.expr(_m("o_totalprice").u).alias("t_cents"),
     )
     ow = Window.partitionBy("o_orderkey")
     j = t.join(w, t.o_orderkey == w.l_orderkey).select(
@@ -17005,16 +17076,7 @@ def pareto_abc_parts(spark, sf_dir):
         _t(spark, sf_dir, "lineitem")
         .groupBy("l_partkey")
         .agg(
-            F.sum(
-                F.round(
-                    F.col("l_extendedprice").cast("decimal(12,2)")
-                    * (F.lit(1) - F.col("l_discount")).cast("decimal(4,2)")
-                    * 10000,
-                    0,
-                ).cast("long")
-            )
-            .cast("long")
-            .alias("r")
+            F.expr(f"sum({(_m('l_extendedprice') * _r('1 - l_discount')).u})").alias("r")
         )
         .localCheckpoint(eager=True)
     )

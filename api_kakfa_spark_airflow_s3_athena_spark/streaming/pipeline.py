@@ -37,6 +37,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
 from ..functions.transforms import parse_kafka_value
+from ..operators.maintenance import reject_streaming_sink
 from ..schemas import EVENTS, NAMES_STREAM
 
 __all__ = [
@@ -159,11 +160,14 @@ def windowed_event_counts(
 def compact(spark: SparkSession, path: str, target_files: int = 8, fmt: str = "parquet") -> None:
     """Rewrite a (partition) directory into ``target_files`` files.
 
-    The OPTIMIZE-style maintenance job for streaming sinks: coalesce
-    (no shuffle) down to large files so later scans open thousands,
-    not millions, of objects. Run per partition directory, off the hot
-    path.
+    The OPTIMIZE-style maintenance job for batch-written tables:
+    coalesce (no shuffle) down to large files so later scans open
+    thousands, not millions, of objects. Run per partition directory,
+    off the hot path. A streaming file sink, or a directory inside one,
+    raises ``ValueError``: its ``_spark_metadata`` log, not the
+    directory listing, says which files it holds.
     """
+    reject_streaming_sink(spark, path)
     df = spark.read.format(fmt).load(path)
     tmp = path.rstrip("/") + "__compact_tmp"
     df.coalesce(target_files).write.mode("overwrite").format(fmt).save(tmp)

@@ -280,3 +280,50 @@ def test_sketch_from_hashes_equals_sketch(spark):
     assert {(r.grp, tuple(r.kmv_hashes)) for r in plain} == {
         (r.grp, tuple(r.kmv_hashes)) for r in from_h
     }
+
+
+def test_containment_exact_phase_shuffles_a_large_eval_side(spark):
+    """The exact containment phase of ``kmv_containment_screen``
+    broadcasts the eval hash stream only while its size estimate fits
+    the broadcast threshold; past the threshold both joins on the hash
+    shuffle instead, with the same per-pair intersections."""
+    import re
+
+    from api_kakfa_spark_airflow_s3_athena_spark.plans.queries import _kcs_exact
+
+    ev = {d: set(range(d, d + 5)) for d in range(3)}
+    tr = {"a": set(range(8)), "b": set(range(0, 8, 2))}
+    evh = spark.createDataFrame(
+        [(d, h) for d, hs in ev.items() for h in hs], "doc_id long, h long"
+    )
+    trh = spark.createDataFrame(
+        [(s, h) for s, hs in tr.items() for h in hs], "source string, h long"
+    )
+    screen = spark.createDataFrame(
+        [(d, s, len(ev[d]), 0, 0, 0.0) for d in ev for s in tr],
+        "eval_id long, key string, n_eval_units long, n_in_region long, "
+        "n_found long, screen_est double",
+    )
+    want = sorted((d, s, len(ev[d] & tr[s])) for d in ev for s in tr)
+
+    def run():
+        df = _kcs_exact(screen, evh, trh)
+        got = sorted((r.eval_id, r.source, r.n_inter) for r in df.collect())
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        plan = plan.split("== Initial Plan ==")[0]  # the plan AQE ran
+        return got, re.findall(r"(\w+Join) \[h#\d+L?\], \[h#", plan)
+
+    got, joins = run()
+    assert got == want
+    assert joins == ["BroadcastHashJoin"] * 2
+    keys = ("spark.sql.autoBroadcastJoinThreshold", "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    prev = {k: spark.conf.get(k, None) for k in keys}
+    try:
+        for k in keys:
+            spark.conf.set(k, "-1")
+        got, joins = run()
+    finally:
+        for k, v in prev.items():
+            spark.conf.unset(k) if v is None else spark.conf.set(k, v)
+    assert got == want
+    assert len(joins) == 2 and "BroadcastHashJoin" not in joins

@@ -3,9 +3,11 @@ kernels: invariants that must hold for ANY input, driven through Spark
 on small generated batches."""
 
 import json
+import math
 
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
+from pyspark.errors import PySparkException
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
@@ -636,3 +638,131 @@ def test_quantile_drift_properties(spark, vals):
     for r in quantile_drift(a, b, "v", "id", qs).collect():
         assert r.n_le_b == 0
         assert abs(r.displacement - r.q) < 1e-9
+
+
+# --- fixed-point money kernel (plans/queries.py) ---------------------------
+# Each value's unscaled long must equal the unscaled value of the
+# CAST(x AS DECIMAL(p,s)) it replaces, and every money sum must round to
+# the same double as the DECIMAL sum it replaces.
+
+_NON_2DP = [1.005, 2.675, 0.125, 1e-7, -1.005, -2.675, 0.994999, 0.995, -0.005, 12.3456]
+
+
+def _dp2(digits):
+    return st.integers(-(10**digits) + 1, 10**digits - 1).map(lambda n: n / 100)
+
+
+def _values(digits, lim):
+    return st.one_of(
+        _dp2(digits),
+        st.sampled_from(_NON_2DP),
+        st.floats(min_value=-lim, max_value=lim),
+        st.just(-0.0),
+        st.none(),
+    )
+
+
+def _unscaled(d, s):
+    return None if d is None else int(d.scaleb(s))
+
+
+@SLOW
+@given(
+    rows=st.lists(
+        st.tuples(_values(12, 1e9), _values(4, 99.0), _values(4, 99.0)),
+        min_size=1,
+        max_size=60,
+    )
+)
+def test_fixed_point_value_equals_decimal_cast(spark, rows):
+    """For ANY double (2-dp, non-2-dp, negative, -0.0, NULL) the kernel's
+    unscaled long equals CAST(x AS DECIMAL(p,s)) scaled by 10^s, and the
+    three-factor charge product equals the DECIMAL product."""
+    from api_kakfa_spark_airflow_s3_athena_spark.plans.queries import _m, _r
+
+    df = spark.createDataFrame(rows, "e double, d double, t double")
+    e, d, t = _m("e"), _r("d"), _r("t")
+    dec_e, dec_d, dec_t = (
+        F.col("e").cast("decimal(12,2)"), F.col("d").cast("decimal(4,2)"), F.col("t").cast("decimal(4,2)")
+    )
+    got = df.select(
+        F.expr(e.u).alias("e"), F.expr(d.u).alias("d"), F.expr(t.u).alias("t"),
+        F.expr((e * (1 - d) * (1 + t)).u).alias("charge"),
+        dec_e.alias("de"), dec_d.alias("dd"), dec_t.alias("dt"),
+        (dec_e * (1 - dec_d) * (1 + dec_t)).alias("dcharge"),
+    ).collect()
+    for r in got:
+        assert (r.e, r.d, r.t) == (_unscaled(r.de, 2), _unscaled(r.dd, 2), _unscaled(r.dt, 2))
+        assert (None if r.charge is None else int(r.charge)) == _unscaled(r.dcharge, 6)
+
+
+def test_fixed_point_out_of_range_and_non_finite_match_the_cast(spark):
+    """Past 10^p, and for NaN/±inf, the kernel takes the cast itself: the
+    same ANSI error class (out of range) or the same NULL (non-finite)."""
+    from api_kakfa_spark_airflow_s3_athena_spark.plans.queries import _m, _r
+
+    def outcome(x, col):
+        df = spark.createDataFrame([(x,)], "x double")
+        try:
+            return ("value", df.select(col.alias("v")).collect()[0].v)
+        except PySparkException as exc:
+            return ("error", exc.getCondition())
+
+    cases = [(_m, "decimal(12,2)", v) for v in (1e10, -1e10, 9999999999.995, 1e300)]
+    cases += [(_r, "decimal(4,2)", v) for v in (100.0, 99.995, -100.5)]
+    cases += [(_m, "decimal(12,2)", v) for v in (float("nan"), float("inf"), float("-inf"))]
+    for kernel, dec, x in cases:
+        got = outcome(x, F.expr(kernel("x").u))
+        want = outcome(x, F.col("x").cast(dec))
+        if want[0] == "value":
+            want = ("value", _unscaled(want[1], 2))
+        assert got == want, x
+        assert (want[0] == "error") == math.isfinite(x), x
+
+
+def test_fixed_point_sums_round_like_the_decimal_sums(spark):
+    """Frame test: a group whose 4-dp sum lands exactly on a .XX50
+    boundary (both signs), and sum_charge-shaped sums of 10^4 rows at
+    the largest DECIMAL(12,2) magnitude — one whose per-row product fits
+    a long but whose sum does not, one whose per-row product overflows
+    a long — round to the same doubles as the DECIMAL path."""
+    from api_kakfa_spark_airflow_s3_athena_spark.plans.queries import (
+        _exact_sum,
+        _m,
+        _money_sum,
+        _r,
+    )
+
+    top = 9999999999.99
+    groups = [
+        ("tie", 1.01, 0.50, 0.0), ("tie", 2.00, 0.50, 0.0),
+        ("neg_tie", -1.01, 0.50, 0.0), ("neg_tie", -2.00, 0.50, 0.0),
+    ]
+    small = spark.createDataFrame(groups, "g string, e double, d double, t double")
+    big = spark.range(10_000).crossJoin(
+        spark.createDataFrame(
+            [("fits", top, 0.0, 0.0), ("wide", top, -99.99, 99.99), ("wide_neg", -top, -99.99, 99.99)],
+            "g string, e double, d double, t double",
+        )
+    ).drop("id")
+    df = small.unionByName(big)
+    e, d, t = _m("e"), _r("d"), _r("t")
+    dec_e, dec_d, dec_t = (
+        F.col("e").cast("decimal(12,2)"), F.col("d").cast("decimal(4,2)"), F.col("t").cast("decimal(4,2)")
+    )
+    got = {
+        r.g: r
+        for r in df.groupBy("g").agg(
+            _money_sum(e * (1 - d), "disc_price"),
+            _money_sum(e * (1 - d) * (1 + t), "charge"),
+            (_exact_sum(e).cast("double") / F.count(F.lit(1))).alias("avg_e"),
+            F.round(F.sum(dec_e * (1 - dec_d)), 2).cast("double").alias("want_disc_price"),
+            F.round(F.sum(dec_e * (1 - dec_d) * (1 + dec_t)), 2).cast("double").alias("want_charge"),
+            (F.sum(dec_e).cast("double") / F.count(F.lit(1))).alias("want_avg_e"),
+        ).collect()
+    }
+    assert set(got) == {"tie", "neg_tie", "fits", "wide", "wide_neg"}
+    for g, r in got.items():
+        assert (r.disc_price, r.charge, r.avg_e) == (r.want_disc_price, r.want_charge, r.want_avg_e), g
+    assert (got["tie"].disc_price, got["neg_tie"].disc_price) == (1.51, -1.51)  # HALF_UP
+    assert got["fits"].charge == 99_999_999_999_900.0  # unscaled sum ~10^20 > 2^63

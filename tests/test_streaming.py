@@ -4,7 +4,9 @@ event-time aggregation, and small-file compaction."""
 
 import json
 import os
+import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from api_kakfa_spark_airflow_s3_athena_spark.functions.transforms import synthetic_users
@@ -184,6 +186,45 @@ def test_compaction_reduces_file_count(spark, tmp_path):
     n_after = len([f for f in os.listdir(out) if f.endswith(".parquet")])
     assert n_after <= 2
     assert spark.read.parquet(out).count() == 200
+
+
+def test_compaction_refuses_a_live_streaming_sink(spark, tmp_path):
+    """Stream batch 1 into a file sink, attempt compaction, stream batch
+    2: both compaction operators refuse the sink (and a partition
+    directory inside it) with a ValueError naming the path, and the sink
+    still reads every row afterwards. Compacting it used to drop its
+    _spark_metadata log, after which batch 2's commit made
+    ``spark.read.parquet(sink)`` fail."""
+    from api_kakfa_spark_airflow_s3_athena_spark.operators.maintenance import compact_parquet
+
+    src = str(tmp_path / "src")
+    out = str(tmp_path / "out")
+    ckpt = str(tmp_path / "ckpt")
+    _write_ndjson(src, _sample_records(10))
+
+    def sink():
+        return start_file_sink(
+            with_ingest_date(json_stream(spark, src)), out, ckpt,
+            partition_by="ingest_date", available_now=True,
+        )
+
+    sink().awaitTermination()
+    part = os.path.join(out, next(d for d in os.listdir(out) if d.startswith("ingest_date=")))
+
+    for target, attempt in (
+        (out, lambda: compact(spark, out, target_files=1)),
+        (part, lambda: compact(spark, part, target_files=1)),
+        (out, lambda: compact_parquet(spark, out, target_bytes=1)),
+    ):
+        with pytest.raises(ValueError, match=re.escape(target)):
+            attempt()
+    assert os.path.isdir(os.path.join(out, "_spark_metadata"))
+
+    with open(os.path.join(src, "part-1.json"), "w") as f:
+        for r in _sample_records(5):
+            f.write(json.dumps(r) + "\n")
+    sink().awaitTermination()
+    assert spark.read.parquet(out).count() == 15
 
 
 def test_read_json_table_dropmalformed(spark, tmp_path):
