@@ -9181,7 +9181,7 @@ def _ensure_pagerank_index(spark, sf_dir) -> str:
     once per session+sf (the write-once graph-snapshot artifact the
     100 TB PageRank iterates against); returns the table name."""
     from ..operators.graph import pagerank_edge_index
-    from ..sources.tables import _delete_warehouse_orphan, ensure_database
+    from ..sources.tables import ensure_app_database
 
     sf_tag = "".join(
         c if c.isalnum() else "_" for c in sf_dir.strip("/").rsplit("/", 1)[-1]
@@ -9190,9 +9190,7 @@ def _ensure_pagerank_index(spark, sf_dir) -> str:
     table = f"{db}.trade_trans"
     key = f"{spark.sparkContext.applicationId}:{table}"
     if not _TABLE_ARTIFACT_CACHE.get(key):
-        ensure_database(spark, db)
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        _delete_warehouse_orphan(spark, db, "trade_trans")
+        ensure_app_database(spark, db)
         pagerank_edge_index(_trade_edges(spark, sf_dir), table, buckets=8)
         _TABLE_ARTIFACT_CACHE[key] = table
     return table
@@ -11723,6 +11721,7 @@ def _run_stream_ann(spark, sf_dir, base):
 
     from ..operators import similarity as SIM
     from ..streaming.ann import ann_index_sink
+    from ..streaming.epochs import EpochStore
 
     emb = _t(spark, sf_dir, "embeddings")
     corpus, plants, _ = _stream_ann_delta(emb)
@@ -11734,9 +11733,7 @@ def _run_stream_ann(spark, sf_dir, base):
     )
     centroids.write.mode("overwrite").parquet(os.path.join(base, "centroids"))
     SIM.pq_save_books(spark, books, os.path.join(base, "books"))
-    enc.write.mode("overwrite").partitionBy("cell").parquet(
-        os.path.join(base, "index", "epoch=-1")
-    )
+    EpochStore(spark, os.path.join(base, "index")).write(enc, -1, partition_by="cell")
     baseline.write.mode("overwrite").parquet(os.path.join(base, "baseline"))
     src = os.path.join(base, "src")
     new = emb.filter(F.col("vec_id") % 5 == 0).select("vec_id", "embedding")
@@ -12975,6 +12972,7 @@ def _run_stream_ann_res(spark, sf_dir, base):
 
     from ..operators import similarity as SIM
     from ..streaming.ann import ann_index_sink
+    from ..streaming.epochs import EpochStore
 
     emb = _t(spark, sf_dir, "embeddings")
     corpus, plants, _ = _stream_ann_delta(emb)
@@ -12987,9 +12985,7 @@ def _run_stream_ann_res(spark, sf_dir, base):
     )
     centroids.write.mode("overwrite").parquet(os.path.join(base, "centroids"))
     SIM.pq_save_books(spark, books, os.path.join(base, "books"))
-    enc.write.mode("overwrite").partitionBy("cell").parquet(
-        os.path.join(base, "index", "epoch=-1")
-    )
+    EpochStore(spark, os.path.join(base, "index")).write(enc, -1, partition_by="cell")
     baseline.write.mode("overwrite").parquet(os.path.join(base, "baseline"))
     src = os.path.join(base, "src")
     new = emb.filter(F.col("vec_id") % 5 == 0).select("vec_id", "embedding")

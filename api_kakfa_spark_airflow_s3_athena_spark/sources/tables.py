@@ -37,6 +37,7 @@ __all__ = [
     "write_table",
     "read_table",
     "ensure_database",
+    "ensure_app_database",
     "create_external_table",
     "save_bucketed",
     "ensure_bucketed_join_tables",
@@ -240,29 +241,36 @@ def ensure_bucketed_join_tables(
     db = f"buck_{sf_tag}_{buckets}"
     key = f"{spark.sparkContext.applicationId}:{db}"
     if not _BUCKETED_CACHE.get(key):
-        ensure_database(spark, db)
+        ensure_app_database(spark, db)
         for table, source, keys in (
             ("orders_b", "orders", ["o_orderkey"]),
             ("lineitem_b", "lineitem", ["l_orderkey"]),
         ):
-            # a previous session's managed-table directory survives in
-            # the warehouse while the in-memory catalog does not — drop
-            # both the entry and any orphan location before writing
-            spark.sql(f"DROP TABLE IF EXISTS {db}.{table}")
-            _delete_warehouse_orphan(spark, db, table)
             save_bucketed(load_table(spark, sf_dir, source), f"{db}.{table}", keys, buckets)
         _BUCKETED_CACHE[key] = db
     return db
 
 
-def _delete_warehouse_orphan(spark: SparkSession, db: str, table: str) -> None:
-    wh = spark.conf.get("spark.sql.warehouse.dir")
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
-    hpath = jvm.org.apache.hadoop.fs.Path(f"{wh.rstrip('/')}/{db}.db/{table}")
-    fs = hpath.getFileSystem(jsc.hadoopConfiguration())
-    if fs.exists(hpath):
-        fs.delete(hpath, True)
+def ensure_app_database(spark: SparkSession, name: str) -> None:
+    """``CREATE DATABASE IF NOT EXISTS`` at a location of this
+    application's own, ``<warehouse>/<applicationId>-<pid>/<name>.db``,
+    removed when the driver JVM exits.
+
+    The catalog is in-memory, so every process starts without these
+    databases; at the shared default location a process had to delete
+    the managed-table directories an earlier process left, and two
+    processes started in one directory deleted each other's live
+    tables."""
+    sc = spark.sparkContext
+    wh = spark.conf.get("spark.sql.warehouse.dir").rstrip("/")
+    app_dir = sc._jvm.org.apache.hadoop.fs.Path(f"{wh}/{sc.applicationId}-{os.getpid()}")
+    fs = app_dir.getFileSystem(sc._jsc.hadoopConfiguration())
+    fs.mkdirs(app_dir)
+    fs.deleteOnExit(app_dir)  # a no-op on a path that does not exist yet
+    spark.sql(
+        f"CREATE DATABASE IF NOT EXISTS {name} "
+        f"LOCATION '{app_dir.toString()}/{name}.db'"
+    )
 
 
 def ensure_database(spark: SparkSession, name: str) -> None:

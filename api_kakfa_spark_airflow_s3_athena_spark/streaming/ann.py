@@ -20,12 +20,10 @@ each micro-batch — kilobyte reads — so a nightly retrain (a REBUILD:
 new books/centroids re-code every stored row) atomically swaps the
 artifact paths and the stream picks them up at the next epoch boundary.
 
-Exactly-once: epoch output lands in ``epoch=<id>`` OVERWRITE
-directories (``epoch=<id>/cell=<c>/…``), so a replayed epoch rewrites
-its own directory instead of appending duplicates; readers see the
-whole tree as one partitioned table, and filters on ``cell`` still
-prune statically inside every epoch directory — the pruning lever the
-index exists for survives the streaming layout.
+Exactly-once: the index and the metrics are epoch stores
+(``streaming/epochs.py``); index epochs are ``epoch=<e>/cell=<c>/…``,
+so filters on ``cell`` still prune statically inside every epoch — the
+pruning lever the index exists for survives the streaming layout.
 
 Drift trigger (the ``pq_index_append`` discipline made continuous):
 each epoch also writes ``(n_vectors, mse)`` — the batch's PQ
@@ -43,7 +41,6 @@ are written.
 
 from __future__ import annotations
 
-import posixpath
 from functools import partial
 
 from pyspark.sql import DataFrame
@@ -55,12 +52,9 @@ from ..operators.similarity import (
     _pq_encode_with_error,
     pq_load_books,
 )
+from .epochs import EpochStore, start_foreach_batch
 
 __all__ = ["ann_index_batch", "ann_index_sink"]
-
-
-def _epoch_dir(base: str, epoch_id) -> str:
-    return posixpath.join(base, f"epoch={epoch_id}")
 
 
 def ann_index_batch(
@@ -125,14 +119,12 @@ def ann_index_batch(
 
     fused = materialize_once(fused)
     rows = fused.filter(F.col("__n").isNull()).select("vec_id", "codes", "cell")
-    rows.write.mode("overwrite").partitionBy("cell").parquet(
-        _epoch_dir(index_path, epoch_id)
-    )
+    EpochStore(spark, index_path).write(rows, epoch_id, partition_by="cell")
     err = fused.filter(F.col("__n").isNotNull()).agg(
         F.sum("__n").cast("long").alias("n_vectors"),
         (F.sum("__sq") / F.sum("__n")).alias("mse"),
     )
-    err.write.mode("overwrite").parquet(_epoch_dir(metrics_path, epoch_id))
+    EpochStore(spark, metrics_path).write(err, epoch_id)
 
 
 def ann_index_sink(
@@ -160,11 +152,4 @@ def ann_index_sink(
         vec_col=vec_col,
         residual=residual,
     )
-    writer = (
-        df.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(df, apply, checkpoint, available_now)

@@ -11,14 +11,8 @@ LATER member arrives — and the union of all per-epoch pair logs
 equals the full batch dedup over the whole corpus (pinned by
 tests/test_streaming_dedup.py).
 
-Exactly-once: all three outputs are written to ``epoch=<id>``
-subdirectories with overwrite semantics, so a replayed batch (the
-``foreachBatch`` epoch is checkpointed) rewrites its own directories
-instead of appending duplicates; the index/corpus reads take only
-STRICTLY EARLIER epochs, so a partially-written failed attempt can
-never feed its own retry and a replay reproduces its original result
-even after later epochs land. Readers see the directories as a
-partitioned table (``epoch`` becomes a partition column on read).
+Exactly-once: the three stores are epoch stores (``streaming/epochs.py``)
+read through ``before`` — strictly-earlier epochs only.
 
 Scale notes: per-batch cost is the delta-dedup cost — the batch is
 banded, its bucket keys broadcast against the index, candidates
@@ -30,21 +24,16 @@ epoch; compaction of old epochs is `operators/maintenance.py`'s job.
 
 from __future__ import annotations
 
-import posixpath
 from functools import partial
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.dedup import minhash_band_index, minhash_delta_dedup_pairs
-from .upsert import target_exists
+from .epochs import EpochStore, start_foreach_batch
 
 __all__ = ["dedup_ingest_batch", "dedup_ingest_sink"]
-
-
-def _epoch_dir(base: str, epoch_id: int) -> str:
-    return posixpath.join(base, f"epoch={epoch_id}")
 
 
 def dedup_ingest_batch(
@@ -65,31 +54,10 @@ def dedup_ingest_batch(
     append (epoch-idempotently) to pairs / index / corpus stores."""
     spark = batch.sparkSession
     docs = batch.select(F.col(id_col), F.col(text_col))
-    # "prior corpus" = strictly earlier epochs (epoch ids are monotone
-    # in structured streaming): a failed attempt's partial output must
-    # not feed its own retry, and a replayed epoch must reproduce its
-    # original result even if later epochs have since landed — both
-    # fall out of the strict < filter. Each store probes its OWN path:
-    # a crash between the per-store writes below can leave one store
-    # an epoch ahead of another, and probing only one path would turn
-    # every retry into a PATH_NOT_FOUND crash loop on the other.
-    def _earlier(path: str, schema: T.StructType) -> DataFrame:
-        if target_exists(spark, path):
-            # stores are written by this sink, so the on-disk schema is
-            # known (fields + the epoch partition column); declaring it
-            # skips the footer-inference job a bare read runs per epoch
-            stored = T.StructType(
-                list(schema.fields) + [T.StructField("epoch", T.IntegerType())]
-            )
-            return (
-                spark.read.schema(stored).parquet(path)
-                .filter(F.col("epoch") < epoch_id)
-                .select(*[f.name for f in schema.fields])
-            )
-        return spark.createDataFrame([], schema)
-
-    index = _earlier(
-        index_path,
+    corpus_store = EpochStore(spark, corpus_path)
+    index_store = EpochStore(spark, index_path)
+    index = index_store.before(
+        epoch_id,
         T.StructType(
             [
                 T.StructField(id_col, T.LongType()),
@@ -98,8 +66,8 @@ def dedup_ingest_batch(
             ]
         ),
     )
-    corpus = _earlier(
-        corpus_path,
+    corpus = corpus_store.before(
+        epoch_id,
         T.StructType(
             [
                 T.StructField(id_col, T.LongType()),
@@ -132,13 +100,11 @@ def dedup_ingest_batch(
         seed=seed,
         delta_bands=bidx,
     )
-    # Write order: corpus -> index -> pairs. The reads above take only
-    # strictly-earlier epochs, so this epoch's own directories never
-    # feed its computation; writing the pairs log last means a pairs
-    # epoch dir existing implies the whole epoch landed.
-    docs.write.mode("overwrite").parquet(_epoch_dir(corpus_path, epoch_id))
-    bidx.write.mode("overwrite").parquet(_epoch_dir(index_path, epoch_id))
-    pairs.write.mode("overwrite").parquet(_epoch_dir(pairs_path, epoch_id))
+    # Write order: corpus -> index -> pairs; a pairs epoch dir existing
+    # implies the whole epoch landed.
+    corpus_store.write(docs, epoch_id)
+    index_store.write(bidx, epoch_id)
+    EpochStore(spark, pairs_path).write(pairs, epoch_id)
 
 
 def dedup_ingest_sink(
@@ -172,11 +138,4 @@ def dedup_ingest_sink(
         shingle_n=shingle_n,
         seed=seed,
     )
-    writer = (
-        df.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(df, apply, checkpoint, available_now)

@@ -32,11 +32,8 @@ counters' worth of mass), every true heavy hitter at the
 contract checks containment and both band inequalities row-for-row
 against an exact recount.
 
-Epoch discipline (the ``streaming/sketches.py`` pattern): epoch ``e``
-reads ONLY epoch ``e-1``'s stored state and overwrites its own
-``epoch=<e>`` directories (``summary/`` and ``meta/``), so replays
-are idempotent and each epoch's state is a readable point-in-time
-snapshot.
+Exactly-once: ``summary/`` and ``meta/`` are epoch stores
+(``streaming/epochs.py``) read through ``last`` — epoch ``e-1`` only.
 
 Scale shape per micro-batch: one map-side-combined (key, unit)
 aggregation over the batch rows unioned with the stored summary (≤
@@ -58,11 +55,9 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .epochs import EpochStore, start_foreach_batch
+
 __all__ = ["mg_summary_batch", "mg_summary_sink"]
-
-
-def _dir(base: str, part: str, epoch_id) -> str:
-    return posixpath.join(base, part, f"epoch={epoch_id}")
 
 
 def mg_summary_batch(
@@ -76,14 +71,12 @@ def mg_summary_batch(
     """Fold one micro-batch into the running per-key MG summary:
     merge the exact in-batch counts into the strictly-earlier epoch's
     stored summary, MG-reduce per key, track the deduction ledger,
-    overwrite this epoch's ``summary``/``meta`` directories. A gap in
-    the epoch store (predecessor missing while other epochs exist)
-    fails loudly instead of silently restarting the fold — the
-    sketches-sink discipline (ADVICE r10)."""
+    overwrite this epoch's ``summary``/``meta`` directories."""
     from ..operators._util import materialize_once
-    from .sketches import _prev_epoch_dir
 
     spark = batch.sparkSession
+    summary_store = EpochStore(spark, posixpath.join(store_path, "summary"))
+    meta_store = EpochStore(spark, posixpath.join(store_path, "meta"))
     gcols = list(key_cols)
     # Every batch occurrence is a row with cnt = bcnt = 1; the stored
     # summary enters the same union with bcnt = 0, so ONE (key, unit)
@@ -93,19 +86,9 @@ def mg_summary_batch(
     rows = batch.where(F.col(unit_col).isNotNull()).select(
         *gcols, unit_col, one.alias("cnt"), one.alias("bcnt")
     )
-    prev_sum = _prev_epoch_dir(
-        spark, posixpath.join(store_path, "summary"), epoch_id
-    )
+    prev_sum = summary_store.last(epoch_id, rows.drop("bcnt").schema)
     if prev_sum is not None:
-        # both stores were written by this fold ⇒ schemas known;
-        # declaring them (here and for the meta read below) skips two
-        # per-epoch footer-inference jobs
-        rows = (
-            spark.read.schema(rows.drop("bcnt").schema)
-            .parquet(prev_sum)
-            .withColumn("bcnt", F.lit(0).cast("long"))
-            .unionByName(rows)
-        )
+        rows = prev_sum.withColumn("bcnt", F.lit(0).cast("long")).unionByName(rows)
     merged = rows.groupBy(*gcols, unit_col).agg(
         F.sum("cnt").alias("cnt"), F.sum("bcnt").alias("bcnt")
     )
@@ -141,19 +124,18 @@ def mg_summary_batch(
         F.col("__n_units").alias("n_units"),
         F.col("__t").alias("deduction"),
     )
-    if prev_sum is not None:
+    prev_meta = meta_store.last(epoch_id, meta.schema)
+    if prev_meta is not None:
         meta = (
-            spark.read.schema(meta.schema)
-            .parquet(_dir(store_path, "meta", epoch_id - 1))
-            .unionByName(meta)
+            prev_meta.unionByName(meta)
             .groupBy(*gcols)
             .agg(
                 F.sum("n_units").cast("long").alias("n_units"),
                 F.sum("deduction").cast("long").alias("deduction"),
             )
         )
-    reduced.write.mode("overwrite").parquet(_dir(store_path, "summary", epoch_id))
-    meta.write.mode("overwrite").parquet(_dir(store_path, "meta", epoch_id))
+    summary_store.write(reduced, epoch_id)
+    meta_store.write(meta, epoch_id)
 
 
 def mg_summary_sink(
@@ -176,11 +158,4 @@ def mg_summary_sink(
         num_counters=num_counters,
         store_path=store_path,
     )
-    writer = (
-        df.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(df, apply, checkpoint, available_now)

@@ -19,12 +19,8 @@ running stream picks the new model up at the next epoch boundary —
 no restart, no code change. A reload per epoch costs one read of a
 ``n_buckets``-row file (kilobytes), nothing against the batch scan.
 
-Exactly-once: scores land in ``epoch=<id>`` overwrite directories, so
-a replayed epoch (the ``foreachBatch`` epoch id is checkpointed)
-rewrites its own directory instead of appending duplicates; readers
-see the directories as one partitioned table. Scoring is stateless
-per document — no cross-epoch reads at all, so unlike the dedup sink
-there is no strictly-earlier-epoch discipline to maintain.
+Exactly-once: scores land in an epoch store (``streaming/epochs.py``).
+Scoring is stateless per document, so no epoch reads another.
 
 Scale shape per micro-batch: explode hashed features (narrow),
 broadcast-join the kilobyte weight table (map-side), one skinny
@@ -35,18 +31,14 @@ model never exceeds driver/executor broadcast scale by construction
 
 from __future__ import annotations
 
-import posixpath
 from functools import partial
 
 from pyspark.sql import DataFrame
 
 from ..operators.scoring import linear_text_classifier
+from .epochs import EpochStore, start_foreach_batch
 
 __all__ = ["quality_gate_batch", "quality_gate_sink"]
-
-
-def _epoch_dir(base: str, epoch_id: int) -> str:
-    return posixpath.join(base, f"epoch={epoch_id}")
 
 
 def quality_gate_batch(
@@ -71,7 +63,7 @@ def quality_gate_batch(
     scored = linear_text_classifier(
         batch, weights, text_col=text_col, id_col=id_col, n_buckets=n_buckets
     )
-    scored.write.mode("overwrite").parquet(_epoch_dir(scores_path, epoch_id))
+    EpochStore(spark, scores_path).write(scored, epoch_id)
 
 
 def quality_gate_sink(
@@ -95,11 +87,4 @@ def quality_gate_sink(
         id_col=id_col,
         n_buckets=n_buckets,
     )
-    writer = (
-        df.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(df, apply, checkpoint, available_now)

@@ -10,15 +10,12 @@ IS ``sketch(batch_0 ∪ … ∪ batch_e)`` — the registered contract pins
 bit-exact array equality between the final epoch's stored synopsis and
 a one-shot batch sketch of the full streamed slice.
 
-Epoch discipline (the ``streaming/dedup.py`` pattern): epoch ``e``
-reads ONLY the strictly-earlier epoch's stored synopsis (``e-1``) and
-overwrites its own ``epoch=<e>`` directory, so replays are idempotent
-AND reproducible after later epochs land — a re-run of epoch ``e``
-sees exactly the inputs it saw the first time. The store keeps every
-epoch's synopsis (kilobytes per group per epoch), which doubles as a
-distinct-count TIME SERIES: ``kmv_estimate`` over epoch ``e``'s row is
-the distinct count of everything ingested through ``e`` — cardinality
-growth monitoring for free.
+Exactly-once: every fold in this module keeps an epoch store
+(``streaming/epochs.py``) read through ``last`` — epoch ``e-1`` only.
+The store keeps every epoch's synopsis (kilobytes per group per epoch),
+which doubles as a distinct-count TIME SERIES: ``kmv_estimate`` over
+epoch ``e``'s row is the distinct count of everything ingested through
+``e`` — cardinality growth monitoring for free.
 
 Scale shape per micro-batch: one bounded two-phase sketch pass over
 the BATCH only (never the history), one kilobyte-per-group merge join
@@ -28,7 +25,6 @@ exceeds k hashes per group.
 
 from __future__ import annotations
 
-import posixpath
 from functools import partial
 from typing import Sequence
 
@@ -36,6 +32,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.sketches import kmv_merge, kmv_sketch
+from .epochs import EpochStore, start_foreach_batch
 
 __all__ = [
     "kmv_sketch_batch",
@@ -51,47 +48,6 @@ __all__ = [
 ]
 
 
-def _epoch_dir(base: str, epoch_id) -> str:
-    return posixpath.join(base, f"epoch={epoch_id}")
-
-
-def _prev_epoch_dir(spark, base: str, epoch_id: int):
-    """Directory of the strictly-earlier epoch's synopsis, or ``None``
-    for a genuinely fresh store (no epoch dirs at all).
-
-    The epoch fold reads ONLY ``epoch_id - 1``. If that directory is
-    missing but OTHER epoch dirs exist, the store and the checkpoint
-    disagree (an epoch dir was compacted/removed out from under a
-    live checkpoint, or the checkpoint was restarted against the
-    wrong store): silently treating the batch as the first epoch
-    would drop every accumulated insertion from the fold, so a gap
-    fails loudly instead (ADVICE r10)."""
-    from .upsert import _hadoop_fs, target_exists
-
-    if target_exists(spark, _epoch_dir(base, epoch_id - 1)):
-        return _epoch_dir(base, epoch_id - 1)
-    fs, hbase = _hadoop_fs(spark, base)
-    existing = []
-    if fs.exists(hbase):
-        for status in fs.listStatus(hbase):
-            name = status.getPath().getName()
-            if name.startswith("epoch="):
-                try:
-                    existing.append(int(name.split("=", 1)[1]))
-                except ValueError:
-                    continue
-    earlier = sorted(e for e in existing if e < epoch_id)
-    if earlier:
-        raise ValueError(
-            f"epoch-fold store {base!r} has a gap: epoch {epoch_id} "
-            f"expects epoch={epoch_id - 1} but found only epochs "
-            f"{earlier} — refusing to silently restart the fold from "
-            "this batch alone (restore the missing epoch or start a "
-            "fresh store+checkpoint pair)"
-        )
-    return None  # fresh store: this IS the first epoch
-
-
 def kmv_sketch_batch(
     batch: DataFrame,
     epoch_id: int,
@@ -103,20 +59,11 @@ def kmv_sketch_batch(
     """Fold one micro-batch into the running synopsis: sketch the
     batch, merge with the strictly-earlier epoch's stored synopsis,
     overwrite this epoch's directory."""
-    spark = batch.sparkSession
+    store = EpochStore(batch.sparkSession, store_path)
     sk = kmv_sketch(batch, group_cols, F.col(value_col), k=k)
-    prev_dir = _prev_epoch_dir(spark, store_path, epoch_id)
-    if prev_dir is not None:
-        # the prior epoch was written by this same fold, so its schema
-        # IS sk.schema — passing it skips the footer-inference job a
-        # bare read runs per epoch (guide §6: never infer on hot paths)
-        merged = kmv_merge(
-            spark.read.schema(sk.schema).parquet(prev_dir), sk, group_cols, k
-        )
-    else:
-        # first epoch: no prior synopsis
-        merged = sk
-    merged.write.mode("overwrite").parquet(_epoch_dir(store_path, epoch_id))
+    prev = store.last(epoch_id, sk.schema)
+    merged = sk if prev is None else kmv_merge(prev, sk, group_cols, k)
+    store.write(merged, epoch_id)
 
 
 def kmv_sketch_sink(
@@ -138,14 +85,7 @@ def kmv_sketch_sink(
         k=k,
         store_path=store_path,
     )
-    writer = (
-        df.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(df, apply, checkpoint, available_now)
 
 
 # =====================================================================
@@ -172,20 +112,14 @@ def cms_sketch_batch(
 ) -> None:
     """Fold one micro-batch into the running counter table: sketch the
     batch, cell-wise add the strictly-earlier epoch's stored counters,
-    overwrite this epoch's directory (idempotent replay — the
-    streaming/dedup.py epoch discipline)."""
+    overwrite this epoch's directory."""
     from ..operators.frequency import cms_merge, count_min_counters
 
-    spark = batch.sparkSession
+    store = EpochStore(batch.sparkSession, store_path)
     sk = count_min_counters(batch, unit_col, width, depth)
-    prev_dir = _prev_epoch_dir(spark, store_path, epoch_id)
-    if prev_dir is not None:
-        # prior epoch written by this fold ⇒ schema known; skip the
-        # per-epoch footer-inference job
-        merged = cms_merge(spark.read.schema(sk.schema).parquet(prev_dir), sk)
-    else:
-        merged = sk
-    merged.write.mode("overwrite").parquet(_epoch_dir(store_path, epoch_id))
+    prev = store.last(epoch_id, sk.schema)
+    merged = sk if prev is None else cms_merge(prev, sk)
+    store.write(merged, epoch_id)
 
 
 def cms_sketch_sink(
@@ -207,14 +141,7 @@ def cms_sketch_sink(
         depth=depth,
         store_path=store_path,
     )
-    writer = (
-        df.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(df, apply, checkpoint, available_now)
 
 
 # =====================================================================
@@ -239,19 +166,11 @@ def hll_sketch_batch(
     """Fold one micro-batch into the running register table."""
     from ..operators.sketches import hll_merge, hll_registers
 
-    spark = batch.sparkSession
+    store = EpochStore(batch.sparkSession, store_path)
     regs = hll_registers(batch, group_cols, F.col(value_col))
-    prev_dir = _prev_epoch_dir(spark, store_path, epoch_id)
-    if prev_dir is not None:
-        merged = hll_merge(
-            # prior epoch written by this fold ⇒ schema known; skip the
-            # per-epoch footer-inference job
-            spark.read.schema(regs.schema).parquet(prev_dir).unionByName(regs),
-            group_cols,
-        )
-    else:
-        merged = regs
-    merged.write.mode("overwrite").parquet(_epoch_dir(store_path, epoch_id))
+    prev = store.last(epoch_id, regs.schema)
+    merged = regs if prev is None else hll_merge(prev.unionByName(regs), group_cols)
+    store.write(merged, epoch_id)
 
 
 def hll_sketch_sink(
@@ -271,14 +190,7 @@ def hll_sketch_sink(
         value_col=value_col,
         store_path=store_path,
     )
-    writer = (
-        df.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(df, apply, checkpoint, available_now)
 
 
 # =====================================================================
@@ -322,21 +234,18 @@ def adaptive_sample_batch(
     current threshold exponent)."""
     from ..operators.quantiles import COIN_SPAN, hash_coin
 
-    spark = batch.sparkSession
-    prev_dir = _prev_epoch_dir(spark, store_path, epoch_id)
+    store = EpochStore(batch.sparkSession, store_path)
     kcols = list(keep_cols)
     if id_col not in kcols:
         raise ValueError("id_col must be one of keep_cols (dedup key)")
-    if prev_dir is not None:
-        # prior epoch written by this fold ⇒ stored schema is the
-        # coined projection + the constant j column; declaring it
-        # skips the per-epoch footer-inference job
-        stored_schema = batch.select(
-            *kcols,
-            F.lit(0).cast("long").alias("__coin"),
-            F.lit(0).alias("j"),
-        ).schema
-        prev = spark.read.schema(stored_schema).parquet(prev_dir)
+    # stored schema: the coined projection + the constant j column
+    prev = store.last(
+        epoch_id,
+        batch.select(
+            *kcols, F.lit(0).cast("long").alias("__coin"), F.lit(0).alias("j")
+        ).schema,
+    )
+    if prev is not None:
         # max over an EMPTY prior store is NULL — an empty epoch is a
         # valid state (empty first batch), not a reason to crash
         j_prev = prev.agg(F.max("j")).collect()[0][0] or 0  # 1-row collect
@@ -372,7 +281,7 @@ def adaptive_sample_batch(
     out = combined.where(F.col("__coin") < F.lit(COIN_SPAN >> j)).withColumn(
         "j", F.lit(j)
     )
-    out.write.mode("overwrite").parquet(_epoch_dir(store_path, epoch_id))
+    store.write(out, epoch_id)
 
 
 def adaptive_sample_sink(
@@ -396,14 +305,7 @@ def adaptive_sample_sink(
         store_path=store_path,
         salt=salt,
     )
-    writer = (
-        df.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(df, apply, checkpoint, available_now)
 
 
 # =====================================================================
@@ -430,18 +332,11 @@ def bloom_sink_batch(
     """Fold one micro-batch into the running filter."""
     from ..operators.bloom import bloom_bits, bloom_merge
 
-    spark = batch.sparkSession
+    store = EpochStore(batch.sparkSession, store_path)
     bits = bloom_bits(batch, key_col, m, n_hashes)
-    prev_dir = _prev_epoch_dir(spark, store_path, epoch_id)
-    if prev_dir is not None:
-        # prior epoch written by this fold ⇒ schema known; skip the
-        # per-epoch footer-inference job
-        merged = bloom_merge(
-            spark.read.schema(bits.schema).parquet(prev_dir), bits
-        )
-    else:
-        merged = bits
-    merged.write.mode("overwrite").parquet(_epoch_dir(store_path, epoch_id))
+    prev = store.last(epoch_id, bits.schema)
+    merged = bits if prev is None else bloom_merge(prev, bits)
+    store.write(merged, epoch_id)
 
 
 def bloom_sink(
@@ -462,11 +357,4 @@ def bloom_sink(
         n_hashes=n_hashes,
         store_path=store_path,
     )
-    writer = (
-        df.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return start_foreach_batch(df, apply, checkpoint, available_now)

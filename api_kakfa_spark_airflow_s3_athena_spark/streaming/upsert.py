@@ -33,21 +33,9 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .epochs import _hadoop_fs, start_foreach_batch, target_exists
+
 __all__ = ["upsert_batch", "upsert_sink", "target_exists"]
-
-
-def _hadoop_fs(spark: SparkSession, path: str):
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(jsc.hadoopConfiguration()), hpath
-
-
-def target_exists(spark: SparkSession, path: str) -> bool:
-    """True iff ``path`` exists (Hadoop FS probe — distinguishes
-    absence from read failure, which must propagate)."""
-    fs, hpath = _hadoop_fs(spark, path)
-    return bool(fs.exists(hpath))
 
 
 def _delete_path(spark: SparkSession, path: str) -> None:
@@ -147,11 +135,6 @@ def upsert_sink(
             batch.sparkSession, batch, target_path, key_cols, order_col, partition_cols
         )
 
-    writer = (
-        df.writeStream.outputMode("update")
-        .foreachBatch(apply)
-        .option("checkpointLocation", checkpoint)
+    return start_foreach_batch(
+        df, apply, checkpoint, available_now, output_mode="update"
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -4,6 +4,11 @@ into a local zip at 100 TB. Exercises the production API
 (sources.tables.ensure_bucketed_join_tables), natural key names on
 both sides."""
 
+import os
+import subprocess
+import sys
+from urllib.parse import urlparse
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -99,3 +104,44 @@ def test_bucketed_audit_fact_joins_no_shuffle(spark, sf_dir, bucketed_db):
     assert len(merged) == 2 and {r.arm for r in merged} == {"plain", "bucketed"}
     for row in merged:
         assert tuple(row)[1:] == tuple(got[0]), (row, got)
+
+
+_SECOND_PROCESS = """
+from api_kakfa_spark_airflow_s3_athena_spark.session import local_test_session
+from api_kakfa_spark_airflow_s3_athena_spark.sources.tables import ensure_bucketed_join_tables
+spark = local_test_session("second-process", cores=1)
+db = ensure_bucketed_join_tables(spark, {sf_dir!r})
+print(spark.sql(f"DESCRIBE DATABASE {{db}}").where("info_name = 'Location'").first().info_value)
+"""
+
+
+def test_second_process_leaves_this_process_tables_alone(spark, sf_dir, bucketed_db):
+    """A second process building the same bucketed database from the
+    same working directory must not touch this process's tables: each
+    application keeps its managed tables at its own location, removed
+    when it exits. At one shared location the second process deleted
+    and rewrote this process's table files under its cached listing."""
+    from api_kakfa_spark_airflow_s3_athena_spark.plans.queries import (
+        bucketed_join_revenue_by_status,
+    )
+
+    before = sorted(map(tuple, bucketed_join_revenue_by_status(spark, sf_dir).collect()))
+    assert len(before) == 3
+    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=repo, SPARK_GRAFT_DRIVER_MEM="1g")
+    out = subprocess.run(
+        [sys.executable, "-c", _SECOND_PROCESS.format(sf_dir=sf_dir)],
+        cwd=os.path.dirname(wh.rstrip("/")),
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    after = sorted(map(tuple, bucketed_join_revenue_by_status(spark, sf_dir).collect()))
+    assert after == before
+    # the second process's database directory went with it
+    second = urlparse(out.stdout.strip().splitlines()[-1]).path
+    assert second.startswith(wh.rstrip("/") + "/")
+    assert not os.path.exists(os.path.dirname(second))

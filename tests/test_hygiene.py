@@ -88,3 +88,21 @@ def test_queries_follow_registration_order():
     registration order, independent of any file next to the package."""
     assert list(queries()) == list(REGISTRY)
     assert list(oracle_sql()) == [n for n, s in REGISTRY.items() if s.oracle]
+
+
+def test_epoch_protocol_lives_only_in_the_epoch_store():
+    """Under ``streaming/`` only ``epochs.py`` starts a ``foreachBatch``
+    query or spells an ``epoch=`` path: every other sink reads, writes
+    and starts through the epoch store instead of growing its own copy
+    of the exactly-once protocol."""
+    root = os.path.join(os.path.dirname(pkg.__file__), "streaming")
+    offenders = []
+    for fname in sorted(os.listdir(root)):
+        if not fname.endswith(".py") or fname == "epochs.py":
+            continue
+        with open(os.path.join(root, fname), encoding="utf-8") as fh:
+            for n, line in enumerate(fh, 1):
+                if "foreachBatch(" in line or re.search(r"[\"']epoch=", line):
+                    offenders.append(f"{fname}:{n}: {line.strip()}")
+    assert os.path.exists(os.path.join(root, "epochs.py"))
+    assert not offenders, offenders
