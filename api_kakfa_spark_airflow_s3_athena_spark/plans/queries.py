@@ -9181,7 +9181,7 @@ def _ensure_pagerank_index(spark, sf_dir) -> str:
     once per session+sf (the write-once graph-snapshot artifact the
     100 TB PageRank iterates against); returns the table name."""
     from ..operators.graph import pagerank_edge_index
-    from ..sources.tables import ensure_app_database
+    from ..sources.tables import ensure_database
 
     sf_tag = "".join(
         c if c.isalnum() else "_" for c in sf_dir.strip("/").rsplit("/", 1)[-1]
@@ -9190,7 +9190,7 @@ def _ensure_pagerank_index(spark, sf_dir) -> str:
     table = f"{db}.trade_trans"
     key = f"{spark.sparkContext.applicationId}:{table}"
     if not _TABLE_ARTIFACT_CACHE.get(key):
-        ensure_app_database(spark, db)
+        ensure_database(spark, db)
         pagerank_edge_index(_trade_edges(spark, sf_dir), table, buckets=8)
         _TABLE_ARTIFACT_CACHE[key] = table
     return table

@@ -37,7 +37,6 @@ __all__ = [
     "write_table",
     "read_table",
     "ensure_database",
-    "ensure_app_database",
     "create_external_table",
     "save_bucketed",
     "ensure_bucketed_join_tables",
@@ -241,7 +240,7 @@ def ensure_bucketed_join_tables(
     db = f"buck_{sf_tag}_{buckets}"
     key = f"{spark.sparkContext.applicationId}:{db}"
     if not _BUCKETED_CACHE.get(key):
-        ensure_app_database(spark, db)
+        ensure_database(spark, db)
         for table, source, keys in (
             ("orders_b", "orders", ["o_orderkey"]),
             ("lineitem_b", "lineitem", ["l_orderkey"]),
@@ -251,12 +250,12 @@ def ensure_bucketed_join_tables(
     return db
 
 
-def ensure_app_database(spark: SparkSession, name: str) -> None:
-    """``CREATE DATABASE IF NOT EXISTS`` at a location of this
-    application's own, ``<warehouse>/<applicationId>-<pid>/<name>.db``,
+def ensure_database(spark: SparkSession, name: str) -> None:
+    """``CREATE DATABASE IF NOT EXISTS`` (S8 parity) at a location of
+    this application's own, ``<warehouse>/<applicationId>-<pid>/<name>.db``,
     removed when the driver JVM exits.
 
-    The catalog is in-memory, so every process starts without these
+    The catalog is in-memory, so every process starts without its
     databases; at the shared default location a process had to delete
     the managed-table directories an earlier process left, and two
     processes started in one directory deleted each other's live
@@ -271,11 +270,6 @@ def ensure_app_database(spark: SparkSession, name: str) -> None:
         f"CREATE DATABASE IF NOT EXISTS {name} "
         f"LOCATION '{app_dir.toString()}/{name}.db'"
     )
-
-
-def ensure_database(spark: SparkSession, name: str) -> None:
-    """``CREATE DATABASE IF NOT EXISTS`` — S8 parity."""
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS {name}")
 
 
 def create_external_table(

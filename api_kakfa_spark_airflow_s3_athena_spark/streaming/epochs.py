@@ -35,10 +35,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-__all__ = ["EpochStore", "start_foreach_batch", "target_exists"]
+__all__ = ["EpochStore", "hadoop_fs", "start_foreach_batch", "target_exists"]
 
 
-def _hadoop_fs(spark: SparkSession, path: str):
+def hadoop_fs(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` of ``path`` on the session's Hadoop conf."""
     jvm = spark.sparkContext._jvm
     jsc = spark.sparkContext._jsc
     hpath = jvm.org.apache.hadoop.fs.Path(path)
@@ -48,7 +49,7 @@ def _hadoop_fs(spark: SparkSession, path: str):
 def target_exists(spark: SparkSession, path: str) -> bool:
     """True iff ``path`` exists (Hadoop FS probe — distinguishes
     absence from read failure, which must propagate)."""
-    fs, hpath = _hadoop_fs(spark, path)
+    fs, hpath = hadoop_fs(spark, path)
     return bool(fs.exists(hpath))
 
 
@@ -94,7 +95,7 @@ class EpochStore:
         prev = self._dir(e - 1)
         if target_exists(self.spark, prev):
             return self.spark.read.schema(schema).parquet(prev)
-        fs, hbase = _hadoop_fs(self.spark, self.path)
+        fs, hbase = hadoop_fs(self.spark, self.path)
         earlier = []
         if fs.exists(hbase):
             for status in fs.listStatus(hbase):

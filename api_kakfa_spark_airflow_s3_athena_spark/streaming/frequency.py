@@ -124,7 +124,17 @@ def mg_summary_batch(
         F.col("__n_units").alias("n_units"),
         F.col("__t").alias("deduction"),
     )
+    # the ledger folds in step with the summary: one store holding
+    # epoch e-1 without the other is a gap, not a fresh start
     prev_meta = meta_store.last(epoch_id, meta.schema)
+    if (prev_meta is None) != (prev_sum is None):
+        lacks = meta_store if prev_meta is None else summary_store
+        raise ValueError(
+            f"epoch-fold store {lacks.path!r} has a gap: epoch {epoch_id} "
+            f"finds no epoch {epoch_id - 1} there while its sibling store "
+            "holds it — refusing to silently restart the fold from this "
+            "batch alone"
+        )
     if prev_meta is not None:
         meta = (
             prev_meta.unionByName(meta)

@@ -33,13 +33,13 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .epochs import _hadoop_fs, start_foreach_batch, target_exists
+from .epochs import hadoop_fs, start_foreach_batch, target_exists
 
-__all__ = ["upsert_batch", "upsert_sink", "target_exists"]
+__all__ = ["upsert_batch", "upsert_sink"]
 
 
 def _delete_path(spark: SparkSession, path: str) -> None:
-    fs, hpath = _hadoop_fs(spark, path)
+    fs, hpath = hadoop_fs(spark, path)
     fs.delete(hpath, True)
 
 

@@ -8,7 +8,9 @@ hitter above the num_counters threshold survives in the final state).
 from __future__ import annotations
 
 import collections
+import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 
@@ -159,6 +161,26 @@ def test_mg_epoch_fold_gap_fails_loudly(spark, tmp_path):
     mg_summary_batch(batch, 1, ["lang"], "unit", 3, store)
     with pytest.raises(ValueError, match="gap"):
         mg_summary_batch(batch, 4, ["lang"], "unit", 3, store)
+
+
+@pytest.mark.parametrize("lost", ["meta", "summary"])
+def test_mg_one_store_lost_fails_loudly(spark, tmp_path, lost):
+    """The summary and the deduction ledger fold in step: with one of
+    the two stores wiped after epoch 0, epoch 1 raises the gap error
+    instead of restarting that store's fold while the other keeps
+    accumulating."""
+    from api_kakfa_spark_airflow_s3_athena_spark.streaming.frequency import (
+        mg_summary_batch,
+    )
+
+    store = str(tmp_path / "store")
+    batch = spark.createDataFrame(
+        [("en", f"w{i % 5}") for i in range(40)], ["lang", "unit"]
+    )
+    mg_summary_batch(batch, 0, ["lang"], "unit", 3, store)
+    shutil.rmtree(f"{store}/{lost}")
+    with pytest.raises(ValueError, match="gap"):
+        mg_summary_batch(batch, 1, ["lang"], "unit", 3, store)
 
 
 def test_stream_bench_records_spark_epoch_seconds(spark, sf_dir):
