@@ -8,6 +8,9 @@ Sections:
 2. Relational/analytical extension: joins, semi/anti, windows, set
    ops, rollup/cube, distinct agg, subqueries, pivot, date functions
    (SURVEY.md §2f scope, all Spark built-ins).
+   Sections 1-2 are each one ``spark.sql`` text over the tables'
+   :class:`TableViews` (``_sql``), as the reference's surface is Athena
+   SQL; sections 3-4 build Column trees over ``load_table``.
 3. Text / dedup / similarity / multimodal extension (BASELINE.json
    north star).
 4. Streaming (bounded replay) — result identical to its batch oracle.
@@ -26,6 +29,7 @@ Conventions for oracle parity:
 
 from __future__ import annotations
 
+import functools
 import os
 import tempfile
 from contextlib import contextmanager
@@ -42,7 +46,7 @@ from ..functions.vectors import cosine, l2_norm
 from ..operators import dedup as DD
 from ..operators import similarity as SIM
 from ..operators.multimodal import resize_media as MM_resize
-from ..sources.tables import load_table
+from ..sources.tables import TableViews, load_table
 from ..streaming import pipeline as SP
 from ..streaming import stateful as STF
 
@@ -206,6 +210,10 @@ def _stream_bench(name: str, run, out: str, *cols: str) -> QueryFn:
 #   capacity is at least that of every DECIMAL sum it replaces, and
 #   rescale by an exact 10^-s literal once per group.
 #
+# The kernel is SQL text. Sections 1–2 compose it straight into their
+# query text (``_exact_sum_sql``, ``_money_sum_sql``); the Column
+# wrappers ``_unscaled_sum``, ``_exact_sum`` and ``_money_sum`` parse it
+# with ``F.expr`` for the DataFrame-built queries of sections 3–4.
 # Project the unscaled columns once per row ahead of joins and of
 # aggregates that use them more than once (tpch_q1, revenue_by_nation):
 # a fixed-point expression inlined into several aggregates is evaluated
@@ -217,9 +225,9 @@ _SUM = "DECIMAL(38,0)"
 class _Fixed(NamedTuple):
     """A fixed-point value: ``u`` is a SQL expression for its exact
     unscaled integer at scale ``s``, and ``|u| < bound``. Expressions
-    are composed as SQL text and parsed once (``F.expr``): built
-    through the Column API, with a JVM round trip per node, each value
-    added ~15 ms to every query build (4-core host, sf0.1)."""
+    are composed as SQL text, never as Column trees: built through the
+    Column API, with a JVM round trip per node, each value added ~15 ms
+    to every query build (4-core host, sf0.1)."""
 
     u: str
     s: int
@@ -264,22 +272,43 @@ def _r(x: str) -> _Fixed:
     return _fixed(x, 4, 2)
 
 
+def _exact_sum_sql(v: _Fixed) -> str:
+    """sum(v) as an exact DECIMAL at scale ``v.s``."""
+    return f"sum(CAST({v.u} AS {_SUM})) * {Decimal(1).scaleb(-v.s):f}BD"
+
+
+def _money_sum_sql(v: _Fixed) -> str:
+    """sum(v) rounded to cents, as the oracle's DOUBLE money column."""
+    return f"CAST(round({_exact_sum_sql(v)}, 2) AS DOUBLE)"
+
+
 def _unscaled_sum(v: _Fixed):
     """sum(v) as an exact integer at scale ``v.s``."""
     return F.expr(f"sum(CAST({v.u} AS {_SUM}))")
 
 
-def _exact_sum_sql(v: _Fixed) -> str:
-    return f"sum(CAST({v.u} AS {_SUM})) * {Decimal(1).scaleb(-v.s):f}BD"
-
-
 def _exact_sum(v: _Fixed):
-    """sum(v) as an exact DECIMAL at scale ``v.s``."""
     return F.expr(_exact_sum_sql(v))
 
 
 def _money_sum(v: _Fixed, alias: str):
-    return F.expr(f"CAST(round({_exact_sum_sql(v)}, 2) AS DOUBLE)").alias(alias)
+    return F.expr(_money_sum_sql(v)).alias(alias)
+
+
+def _sql(build: Callable[[TableViews], str]) -> QueryFn:
+    """A query that is one ``spark.sql`` text: ``build(t)`` returns it,
+    naming each table ``t.<table>`` (a :class:`TableViews` view). One
+    parse replaces a Column tree's JVM round trip per node, and the
+    views skip re-resolving each table's relation on every build. The
+    registry's DuckDB oracle is separate text, so it stays an
+    independent check of this one."""
+
+    @functools.wraps(build)
+    def query(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return spark.sql(build(TableViews(spark, sf_dir)))
+
+    query.sql_text = build  # marks the SQL surface; tests enumerate it by this
+    return query
 
 
 # =====================================================================
@@ -291,12 +320,13 @@ def _money_sum(v: _Fixed, alias: str):
     oracle="SELECT * FROM customer ORDER BY c_name LIMIT 20",
     tags=("athena", "sort", "limit"),
 )
-def athena_q1_topk_scan(spark, sf_dir):
+@_sql
+def athena_q1_topk_scan(t):
     """Full scan + ORDER BY + LIMIT (Q1 shape: ``SELECT * FROM
     names_stream ORDER BY name LIMIT 20``). Catalyst plans
     TakeOrderedAndProject — per-partition top-k then a k-row merge, no
     full sort even at 100 TB."""
-    return _t(spark, sf_dir, "customer").orderBy("c_name").limit(20)
+    return f"SELECT * FROM {t.customer} ORDER BY c_name LIMIT 20"
 
 
 @register(
@@ -304,10 +334,11 @@ def athena_q1_topk_scan(spark, sf_dir):
     oracle="SELECT count(*) AS cnt FROM lineitem",
     tags=("athena", "agg"),
 )
-def athena_q2_count(spark, sf_dir):
+@_sql
+def athena_q2_count(t):
     """Ungrouped COUNT(*) (Q2). Parquet-metadata-driven when possible;
     otherwise partial counts + single final combine."""
-    return _t(spark, sf_dir, "lineitem").agg(F.count(F.lit(1)).alias("cnt"))
+    return f"SELECT count(1) AS cnt FROM {t.lineitem}"
 
 
 @register(
@@ -320,17 +351,16 @@ def athena_q2_count(spark, sf_dir):
     """,
     tags=("athena", "filter", "agg"),
 )
-def athena_q3_null_blank_audit(spark, sf_dir):
+@_sql
+def athena_q3_null_blank_audit(t):
     """NULL/empty-string data-quality audit (Q3 shape: ``WHERE name IS
     NULL OR name = ''``), as conditional counts in one pass."""
-    d = _t(spark, sf_dir, "documents")
-    bad_text = F.col("text").isNull() | (F.col("text") == "")
-    bad_lang = F.col("lang").isNull() | (F.col("lang") == "")
-    return d.agg(
-        F.count(F.lit(1)).alias("total"),
-        F.count(F.when(bad_text, 1)).alias("n_null_blank"),
-        F.count(F.when(bad_lang, 1)).alias("n_null_lang"),
-    )
+    return f"""
+        SELECT count(1) AS total,
+               count(CASE WHEN text IS NULL OR text = '' THEN 1 END) AS n_null_blank,
+               count(CASE WHEN lang IS NULL OR lang = '' THEN 1 END) AS n_null_lang
+        FROM {t.documents}
+    """
 
 
 @register(
@@ -341,15 +371,11 @@ def athena_q3_null_blank_audit(spark, sf_dir):
     """,
     tags=("athena", "agg", "having"),
 )
-def athena_q4_duplicate_keys(spark, sf_dir):
+@_sql
+def athena_q4_duplicate_keys(t):
     """Duplicate detection via GROUP BY/HAVING (Q4 shape: duplicate
     emails). Partial+final hash aggregate; AQE splits skewed keys."""
-    return (
-        _t(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .filter(F.col("cnt") > 1)
-    )
+    return f"SELECT user_id, count(1) AS cnt FROM {t.events} GROUP BY user_id HAVING cnt > 1"
 
 
 @register(
@@ -362,15 +388,17 @@ def athena_q4_duplicate_keys(spark, sf_dir):
     """,
     tags=("athena", "filter"),
 )
-def athena_q5_range_violations(spark, sf_dir):
+@_sql
+def athena_q5_range_violations(t):
     """NOT BETWEEN ... OR NOT BETWEEN range validation (Q5 shape: geo
     coordinate checks). The disjunction of negated ranges still pushes
     to the parquet scan as row-group min/max skipping."""
-    li = _t(spark, sf_dir, "lineitem")
-    return li.select("l_orderkey", "l_linenumber", "l_quantity", "l_extendedprice").filter(
-        ~F.col("l_quantity").between(5, 45)
-        | ~F.col("l_extendedprice").between(1000, 90000)
-    )
+    return f"""
+        SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice
+        FROM {t.lineitem}
+        WHERE l_quantity NOT BETWEEN 5 AND 45
+           OR l_extendedprice NOT BETWEEN 1000 AND 90000
+    """
 
 
 @register(
@@ -387,23 +415,21 @@ def athena_q5_range_violations(spark, sf_dir):
     """,
     tags=("athena", "pruning", "agg"),
 )
-def athena_q6_partition_pruned_agg(spark, sf_dir):
+@_sql
+def athena_q6_partition_pruned_agg(t):
     """Date-bounded aggregation (Q6: the partition-pruning practice the
     reference recommends). On an ingest-date-partitioned table this
     predicate prunes directories; on raw parquet it min/max-skips row
     groups. Either way only one year of data is read."""
-    o = _t(spark, sf_dir, "orders")
-    return (
-        o.filter(
-            (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp"))
-            & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))
-        )
-        .groupBy(F.month("o_orderdate").alias("order_month"))
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            _money_sum(_m("o_totalprice"), "total_value"),
-        )
-    )
+    return f"""
+        SELECT month(o_orderdate) AS order_month,
+               count(1) AS n_orders,
+               {_money_sum_sql(_m("o_totalprice"))} AS total_value
+        FROM {t.orders}
+        WHERE o_orderdate >= CAST('1997-01-01' AS TIMESTAMP)
+          AND o_orderdate < CAST('1998-01-01' AS TIMESTAMP)
+        GROUP BY 1
+    """
 
 
 # =====================================================================
@@ -434,32 +460,34 @@ def athena_q6_partition_pruned_agg(spark, sf_dir):
     """,
     tags=("analytics", "agg"),
 )
-def tpch_q1_pricing_summary(spark, sf_dir):
+@_sql
+def tpch_q1_pricing_summary(t):
     """TPC-H Q1 pricing summary: the flagship wide aggregation. One
     scan (3 columns pruned from 11), map-side partial aggregation into
     a tiny final exchange — the canonical shape that survives 100 TB.
     The three fixed-point money columns are projected once per row."""
     ext, disc, tax = _m("l_extendedprice"), _r("l_discount"), _r("l_tax")
-    li = (
-        _t(spark, sf_dir, "lineitem")
-        .filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
-        .select(
-            "l_returnflag", "l_linestatus", "l_quantity",
-            F.expr(ext.u).alias("ext"), F.expr(disc.u).alias("disc"), F.expr(tax.u).alias("tax"),
-        )
-    )
+    li = f"""
+        SELECT l_returnflag, l_linestatus, l_quantity,
+               {ext.u} AS ext, {disc.u} AS disc, {tax.u} AS tax
+        FROM {t.lineitem}
+        WHERE l_shipdate <= CAST('1998-09-02' AS TIMESTAMP)
+    """
     ext, disc, tax = ext._replace(u="ext"), disc._replace(u="disc"), tax._replace(u="tax")
     disc_price = ext * (1 - disc)
-    return li.groupBy("l_returnflag", "l_linestatus").agg(
-        F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-        _money_sum(ext, "sum_base_price"),
-        _money_sum(disc_price, "sum_disc_price"),
-        _money_sum(disc_price * (1 + tax), "sum_charge"),
-        (F.sum("l_quantity").cast("double") / F.count(F.lit(1))).alias("avg_qty"),
-        (_exact_sum(ext).cast("double") / F.count(F.lit(1))).alias("avg_price"),
-        (_exact_sum(disc).cast("double") / F.count(F.lit(1))).alias("avg_disc"),
-        F.count(F.lit(1)).alias("count_order"),
-    )
+    return f"""
+        SELECT l_returnflag, l_linestatus,
+               round(sum(l_quantity), 2) AS sum_qty,
+               {_money_sum_sql(ext)} AS sum_base_price,
+               {_money_sum_sql(disc_price)} AS sum_disc_price,
+               {_money_sum_sql(disc_price * (1 + tax))} AS sum_charge,
+               CAST(sum(l_quantity) AS DOUBLE) / count(1) AS avg_qty,
+               CAST({_exact_sum_sql(ext)} AS DOUBLE) / count(1) AS avg_price,
+               CAST({_exact_sum_sql(disc)} AS DOUBLE) / count(1) AS avg_disc,
+               count(1) AS count_order
+        FROM ({li})
+        GROUP BY l_returnflag, l_linestatus
+    """
 
 
 @register(
@@ -479,7 +507,8 @@ def tpch_q1_pricing_summary(spark, sf_dir):
     """,
     tags=("analytics", "join", "agg"),
 )
-def revenue_by_nation(spark, sf_dir):
+@_sql
+def revenue_by_nation(t):
     """Five-table star join -> revenue rollup. Round-13 shape (guide
     §2.4): the fact stream aggregates BY ``c_nationkey`` (25 groups,
     map-side partials) BEFORE the nation/region name joins, so the
@@ -494,30 +523,22 @@ def revenue_by_nation(spark, sf_dir):
     partials re-sum exactly, so results are bit-identical to the
     one-shot aggregate."""
     rev = _m("l_extendedprice") * (1 - _r("l_discount"))
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", F.expr(rev.u).alias("rev"))
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = _t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
-    r = _t(spark, sf_dir, "region")
-    per_nation = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, F.col("o_custkey") == F.col("c_custkey"))
-        .groupBy("c_nationkey")
-        .agg(
-            _exact_sum(rev._replace(u="rev")).alias("__rev"),
-            F.count(F.lit(1)).alias("n_lines"),
+    return f"""
+        WITH per_nation AS (
+            SELECT c_nationkey, {_exact_sum_sql(rev._replace(u="rev"))} AS __rev,
+                   count(1) AS n_lines
+            FROM (SELECT l_orderkey, {rev.u} AS rev FROM {t.lineitem}) li
+            JOIN (SELECT o_orderkey, o_custkey FROM {t.orders}) o ON li.l_orderkey = o.o_orderkey
+            JOIN (SELECT c_custkey, c_nationkey FROM {t.customer}) c ON o_custkey = c_custkey
+            GROUP BY c_nationkey
         )
-    )
-    return (
-        per_nation.join(F.broadcast(n), per_nation.c_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), F.col("n_regionkey") == r.r_regionkey)
-        .select(
-            "r_name",
-            "n_name",
-            F.round(F.col("__rev"), 2).cast("double").alias("revenue"),
-            "n_lines",
-        )
-    )
+        SELECT /*+ BROADCAST(n), BROADCAST(r) */
+               r_name, n_name, CAST(round(__rev, 2) AS DOUBLE) AS revenue, n_lines
+        FROM per_nation p
+        JOIN (SELECT n_nationkey, n_name, n_regionkey FROM {t.nation}) n
+          ON p.c_nationkey = n.n_nationkey
+        JOIN {t.region} r ON n_regionkey = r.r_regionkey
+    """
 
 
 @register(
@@ -534,18 +555,21 @@ def revenue_by_nation(spark, sf_dir):
     """,
     tags=("analytics", "window", "join"),
 )
-def top_customers_per_nation(spark, sf_dir):
+@_sql
+def top_customers_per_nation(t):
     """Top-k per group: ranking window + filter. One shuffle on the
     partition key; ties broken deterministically by c_custkey."""
-    c = _t(spark, sf_dir, "customer")
-    n = _t(spark, sf_dir, "nation")
-    w = Window.partitionBy("n_name").orderBy(F.col("c_acctbal").desc(), F.col("c_custkey"))
-    return (
-        c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .withColumn("rnk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rnk") <= 3)
-        .select("n_name", "c_name", F.round("c_acctbal", 2).alias("acctbal"), "rnk")
-    )
+    return f"""
+        SELECT n_name, c_name, round(c_acctbal, 2) AS acctbal, rnk
+        FROM (
+            SELECT /*+ BROADCAST(n) */ n_name, c_name, c_acctbal,
+                   CAST(row_number() OVER (
+                       PARTITION BY n_name ORDER BY c_acctbal DESC, c_custkey
+                   ) AS INT) AS rnk
+            FROM {t.customer} c JOIN {t.nation} n ON c.c_nationkey = n.n_nationkey
+        )
+        WHERE rnk <= 3
+    """
 
 
 @register(
@@ -556,12 +580,14 @@ def top_customers_per_nation(spark, sf_dir):
     """,
     tags=("analytics", "join", "semi"),
 )
-def semi_join_customers_with_orders(spark, sf_dir):
+@_sql
+def semi_join_customers_with_orders(t):
     """EXISTS as a left-semi join: probe side streams, no row
     duplication, orders' payload columns never read."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").select("o_custkey")
-    return c.join(o, c.c_custkey == o.o_custkey, "left_semi").select("c_custkey", "c_name")
+    return f"""
+        SELECT c_custkey, c_name
+        FROM {t.customer} c LEFT SEMI JOIN {t.orders} o ON c.c_custkey = o.o_custkey
+    """
 
 
 @register(
@@ -572,10 +598,12 @@ def semi_join_customers_with_orders(spark, sf_dir):
     """,
     tags=("analytics", "join", "anti"),
 )
-def anti_join_customers_without_orders(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").select("o_custkey")
-    return c.join(o, c.c_custkey == o.o_custkey, "left_anti").select("c_custkey", "c_name")
+@_sql
+def anti_join_customers_without_orders(t):
+    return f"""
+        SELECT c_custkey, c_name
+        FROM {t.customer} c LEFT ANTI JOIN {t.orders} o ON c.c_custkey = o.o_custkey
+    """
 
 
 @register(
@@ -591,17 +619,18 @@ def anti_join_customers_without_orders(spark, sf_dir):
     """,
     tags=("analytics", "join", "semi", "agg"),
 )
-def priority_orders_with_discounted_lines(spark, sf_dir):
+@_sql
+def priority_orders_with_discounted_lines(t):
     """TPC-H Q4 shape: correlated EXISTS -> semi join -> aggregate. The
     l_discount filter is pushed below the join so the semi-join build
     side is pre-shrunk."""
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_discount") > 0.05).select("l_orderkey")
-    return (
-        o.join(li, o.o_orderkey == li.l_orderkey, "left_semi")
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("n_orders"))
-    )
+    return f"""
+        SELECT o_orderpriority, count(1) AS n_orders
+        FROM {t.orders} o
+        LEFT SEMI JOIN (SELECT l_orderkey FROM {t.lineitem} WHERE l_discount > 0.05D) l
+          ON o.o_orderkey = l.l_orderkey
+        GROUP BY o_orderpriority
+    """
 
 
 @register(
@@ -613,11 +642,14 @@ def priority_orders_with_discounted_lines(spark, sf_dir):
     """,
     tags=("analytics", "setop"),
 )
-def setop_nations_without_suppliers(spark, sf_dir):
+@_sql
+def setop_nations_without_suppliers(t):
     """EXCEPT (distinct set difference)."""
-    c = _t(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
-    s = _t(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
-    return c.subtract(s)
+    return f"""
+        SELECT c_nationkey AS nationkey FROM {t.customer}
+        EXCEPT
+        SELECT s_nationkey AS nationkey FROM {t.supplier}
+    """
 
 
 @register(
@@ -629,10 +661,13 @@ def setop_nations_without_suppliers(spark, sf_dir):
     """,
     tags=("analytics", "setop"),
 )
-def setop_nations_with_both(spark, sf_dir):
-    c = _t(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
-    s = _t(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
-    return c.intersect(s)
+@_sql
+def setop_nations_with_both(t):
+    return f"""
+        SELECT c_nationkey AS nationkey FROM {t.customer}
+        INTERSECT
+        SELECT s_nationkey AS nationkey FROM {t.supplier}
+    """
 
 
 @register(
@@ -648,12 +683,19 @@ def setop_nations_with_both(spark, sf_dir):
     """,
     tags=("analytics", "setop", "agg"),
 )
-def setop_union_all_parties(spark, sf_dir):
+@_sql
+def setop_union_all_parties(t):
     """UNION ALL + aggregate: union is a zero-shuffle concatenation;
     the single shuffle happens once at the aggregate."""
-    c = _t(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
-    s = _t(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
-    return c.unionAll(s).groupBy("nationkey").agg(F.count(F.lit(1)).alias("n"))
+    return f"""
+        SELECT nationkey, count(1) AS n
+        FROM (
+            SELECT c_nationkey AS nationkey FROM {t.customer}
+            UNION ALL
+            SELECT s_nationkey AS nationkey FROM {t.supplier}
+        )
+        GROUP BY nationkey
+    """
 
 
 @register(
@@ -666,14 +708,16 @@ def setop_union_all_parties(spark, sf_dir):
     """,
     tags=("analytics", "rollup"),
 )
-def rollup_lineitem_status(spark, sf_dir):
+@_sql
+def rollup_lineitem_status(t):
     """Hierarchical subtotals via ROLLUP (Expand + single aggregate —
     not one pass per level)."""
-    return (
-        _t(spark, sf_dir, "lineitem")
-        .rollup("l_returnflag", "l_linestatus")
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("l_quantity"), 2).alias("sum_qty"))
-    )
+    return f"""
+        SELECT l_returnflag, l_linestatus,
+               count(1) AS n, round(sum(l_quantity), 2) AS sum_qty
+        FROM {t.lineitem}
+        GROUP BY ROLLUP (l_returnflag, l_linestatus)
+    """
 
 
 @register(
@@ -687,12 +731,14 @@ def rollup_lineitem_status(spark, sf_dir):
     """,
     tags=("analytics", "cube"),
 )
-def cube_order_status_priority(spark, sf_dir):
-    return (
-        _t(spark, sf_dir, "orders")
-        .cube("o_orderstatus", "o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("n"), _money_sum(_m("o_totalprice"), "total"))
-    )
+@_sql
+def cube_order_status_priority(t):
+    return f"""
+        SELECT o_orderstatus, o_orderpriority,
+               count(1) AS n, {_money_sum_sql(_m("o_totalprice"))} AS total
+        FROM {t.orders}
+        GROUP BY CUBE (o_orderstatus, o_orderpriority)
+    """
 
 
 @register(
@@ -706,18 +752,17 @@ def cube_order_status_priority(spark, sf_dir):
     """,
     tags=("analytics", "agg", "distinct"),
 )
-def distinct_agg_per_flag(spark, sf_dir):
+@_sql
+def distinct_agg_per_flag(t):
     """Multiple exact COUNT(DISTINCT)s: Catalyst expands to a two-stage
     aggregate; at extreme scale swap in approx_count_distinct."""
-    return (
-        _t(spark, sf_dir, "lineitem")
-        .groupBy("l_returnflag")
-        .agg(
-            F.countDistinct("l_suppkey").alias("n_suppliers"),
-            F.countDistinct("l_partkey").alias("n_parts"),
-            F.count(F.lit(1)).alias("n_lines"),
-        )
-    )
+    return f"""
+        SELECT l_returnflag,
+               count(DISTINCT l_suppkey) AS n_suppliers,
+               count(DISTINCT l_partkey) AS n_parts,
+               count(1) AS n_lines
+        FROM {t.lineitem} GROUP BY l_returnflag
+    """
 
 
 @register(
@@ -732,16 +777,16 @@ def distinct_agg_per_flag(spark, sf_dir):
     """,
     tags=("analytics", "date", "agg"),
 )
-def monthly_order_stats(spark, sf_dir):
-    return (
-        _t(spark, sf_dir, "orders")
-        .groupBy(F.date_trunc("month", "o_orderdate").alias("order_month"))
-        .agg(
-            F.count(F.lit(1)).alias("n_orders"),
-            _money_sum(_m("o_totalprice"), "total_value"),
-            (_exact_sum(_m("o_totalprice")).cast("double") / F.count(F.lit(1))).alias("avg_value"),
-        )
-    )
+@_sql
+def monthly_order_stats(t):
+    price = _m("o_totalprice")
+    return f"""
+        SELECT date_trunc('month', o_orderdate) AS order_month,
+               count(1) AS n_orders,
+               {_money_sum_sql(price)} AS total_value,
+               CAST({_exact_sum_sql(price)} AS DOUBLE) / count(1) AS avg_value
+        FROM {t.orders} GROUP BY 1
+    """
 
 
 @register(
@@ -757,20 +802,20 @@ def monthly_order_stats(spark, sf_dir):
     """,
     tags=("analytics", "window"),
 )
-def running_customer_revenue(spark, sf_dir):
+@_sql
+def running_customer_revenue(t):
     """Running (prefix) sum per customer: both engines accumulate in
     the same deterministic order, so values agree bit-for-bit before
     rounding."""
-    w = (
-        Window.partitionBy("o_custkey")
-        .orderBy("o_orderdate", "o_orderkey")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return _t(spark, sf_dir, "orders").select(
-        "o_custkey",
-        "o_orderkey",
-        F.round(F.sum("o_totalprice").over(w), 2).alias("running_total"),
-    )
+    return f"""
+        SELECT o_custkey, o_orderkey,
+               round(sum(o_totalprice) OVER (
+                   PARTITION BY o_custkey
+                   ORDER BY o_orderdate, o_orderkey
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+               ), 2) AS running_total
+        FROM {t.orders}
+    """
 
 
 @register(
@@ -787,18 +832,24 @@ def running_customer_revenue(spark, sf_dir):
     """,
     tags=("analytics", "window", "date"),
 )
-def order_gap_days(spark, sf_dir):
+@_sql
+def order_gap_days(t):
     """LAG + date arithmetic: days since the customer's previous order."""
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    o = _t(spark, sf_dir, "orders")
-    return (
-        o.withColumn("prev_date", F.lag("o_orderdate").over(w))
-        .withColumn(
-            "gap_days", F.datediff(F.to_date("o_orderdate"), F.to_date("prev_date")).cast("int")
+    return f"""
+        SELECT o_custkey, o_orderkey, gap_days
+        FROM (
+            SELECT o_custkey, o_orderkey,
+                   CAST(datediff(to_date(o_orderdate), to_date(prev_date)) AS INT) AS gap_days
+            FROM (
+                SELECT o_custkey, o_orderkey, o_orderdate,
+                       lag(o_orderdate) OVER (
+                           PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
+                       ) AS prev_date
+                FROM {t.orders}
+            )
         )
-        .filter(F.col("gap_days").isNotNull())
-        .select("o_custkey", "o_orderkey", "gap_days")
-    )
+        WHERE gap_days IS NOT NULL
+    """
 
 
 @register(
@@ -810,17 +861,17 @@ def order_gap_days(spark, sf_dir):
     """,
     tags=("analytics", "subquery"),
 )
-def parts_above_avg_price(spark, sf_dir):
+@_sql
+def parts_above_avg_price(t):
     """Scalar subquery, kept declarative: the 1-row aggregate is
     broadcast-joined against the scan (no driver collect), which is
     exactly how Catalyst plans an uncorrelated scalar subquery."""
-    p = _t(spark, sf_dir, "part")
-    avg_price = p.agg(F.avg("p_retailprice").alias("avg_price"))
-    return (
-        p.join(F.broadcast(avg_price))
-        .filter(F.col("p_retailprice") > F.col("avg_price"))
-        .select("p_partkey", "p_brand", F.round("p_retailprice", 2).alias("price"))
-    )
+    return f"""
+        SELECT /*+ BROADCAST(a) */ p_partkey, p_brand, round(p_retailprice, 2) AS price
+        FROM {t.part} p
+        JOIN (SELECT avg(p_retailprice) AS avg_price FROM {t.part}) a
+          ON p_retailprice > avg_price
+    """
 
 
 @register(
@@ -833,14 +884,16 @@ def parts_above_avg_price(spark, sf_dir):
     """,
     tags=("analytics", "pivot"),
 )
-def pivot_quantity_by_linestatus(spark, sf_dir):
+@_sql
+def pivot_quantity_by_linestatus(t):
     """Pivot as conditional aggregation (explicit CASE keeps output
     column names oracle-stable; semantically what ``.pivot()`` plans)."""
-    li = _t(spark, sf_dir, "lineitem")
-    return li.groupBy("l_returnflag").agg(
-        F.round(F.sum(F.when(F.col("l_linestatus") == "O", F.col("l_quantity")).otherwise(0)), 2).alias("qty_open"),
-        F.round(F.sum(F.when(F.col("l_linestatus") == "F", F.col("l_quantity")).otherwise(0)), 2).alias("qty_filled"),
-    )
+    return f"""
+        SELECT l_returnflag,
+               round(sum(CASE WHEN l_linestatus = 'O' THEN l_quantity ELSE 0 END), 2) AS qty_open,
+               round(sum(CASE WHEN l_linestatus = 'F' THEN l_quantity ELSE 0 END), 2) AS qty_filled
+        FROM {t.lineitem} GROUP BY l_returnflag
+    """
 
 
 @register(
@@ -854,16 +907,16 @@ def pivot_quantity_by_linestatus(spark, sf_dir):
     """,
     tags=("analytics", "json"),
 )
-def json_props_extract(spark, sf_dir):
+@_sql
+def json_props_extract(t):
     """JSON parse with declared schema (P2 parity surface:
     ``from_json`` with a fixed StructType, permissive) over the events
     table's JSON props column."""
-    e = _t(spark, sf_dir, "events")
-    parsed = e.select("event_type", F.from_json("props", "k INT").alias("p"))
-    return parsed.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        (F.sum(F.col("p.k")).cast("double") / F.count(F.lit(1))).alias("avg_k"),
-    )
+    return f"""
+        SELECT event_type, count(1) AS n, CAST(sum(p.k) AS DOUBLE) / count(1) AS avg_k
+        FROM (SELECT event_type, from_json(props, 'k INT') AS p FROM {t.events})
+        GROUP BY event_type
+    """
 
 
 @register(
@@ -880,21 +933,20 @@ def json_props_extract(spark, sf_dir):
     """,
     tags=("analytics", "map", "json"),
 )
-def map_type_props_explode(spark, sf_dir):
+@_sql
+def map_type_props_explode(t):
     """Map-typed columns: JSON props parsed as map<string,int>, keys
     exploded, per-key value stats — the schemaless-property pattern
     (the map type the reference's pipeline never exposes)."""
-    e = _t(spark, sf_dir, "events")
-    m = F.from_json("props", "map<string,int>")
-    return (
-        e.select(F.explode(m).alias("prop_key", "val"))
-        .groupBy("prop_key")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.min("val").cast("int").alias("min_val"),
-            F.max("val").cast("int").alias("max_val"),
+    return f"""
+        SELECT prop_key, count(1) AS n,
+               CAST(min(val) AS INT) AS min_val, CAST(max(val) AS INT) AS max_val
+        FROM (
+            SELECT explode(from_json(props, 'map<string,int>')) AS (prop_key, val)
+            FROM {t.events}
         )
-    )
+        GROUP BY prop_key
+    """
 
 
 @register(
@@ -907,12 +959,13 @@ def map_type_props_explode(spark, sf_dir):
     """,
     tags=("analytics", "date", "agg"),
 )
-def hourly_event_stats(spark, sf_dir):
-    return (
-        _t(spark, sf_dir, "events")
-        .groupBy(F.date_trunc("hour", "ts").alias("hour_start"), F.col("event_type"))
-        .agg(F.count(F.lit(1)).alias("n_events"), _money_sum(_m("value"), "sum_value"))
-    )
+@_sql
+def hourly_event_stats(t):
+    return f"""
+        SELECT date_trunc('hour', ts) AS hour_start, event_type,
+               count(1) AS n_events, {_money_sum_sql(_m("value"))} AS sum_value
+        FROM {t.events} GROUP BY 1, 2
+    """
 
 
 @register(
@@ -934,31 +987,31 @@ def hourly_event_stats(spark, sf_dir):
     """,
     tags=("analytics", "join", "topk"),
 )
-def tpch_q3_shipping_priority(spark, sf_dir):
+@_sql
+def tpch_q3_shipping_priority(t):
     """TPC-H Q3: filtered 3-table join -> grouped revenue -> top 10.
     Filters push below the joins on all three scans; the limit runs as
     top-k on the rounded revenue with key tie-break (deterministic
     across engines). Lineitem rows carry (orderkey, unscaled revenue)
     through the joins."""
-    c = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING").select("c_custkey")
-    o = _t(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") < F.lit("1998-03-15").cast("timestamp")
-    )
     rev = _m("l_extendedprice") * (1 - _r("l_discount"))
-    li = (
-        _t(spark, sf_dir, "lineitem")
-        .filter(F.col("l_shipdate") > F.lit("1998-03-15").cast("timestamp"))
-        .select("l_orderkey", F.expr(rev.u).alias("rev"))
-    )
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(c, F.col("o_custkey") == c.c_custkey)
-        .groupBy("o_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(_money_sum(rev._replace(u="rev"), "revenue"))
-        .select("o_orderkey", "revenue", "o_orderdate", "o_orderpriority")
-        .orderBy(F.col("revenue").desc(), F.col("o_orderkey"))
-        .limit(10)
-    )
+    return f"""
+        SELECT o_orderkey, {_money_sum_sql(rev._replace(u="rev"))} AS revenue,
+               o_orderdate, o_orderpriority
+        FROM (
+            SELECT l_orderkey, {rev.u} AS rev FROM {t.lineitem}
+            WHERE l_shipdate > CAST('1998-03-15' AS TIMESTAMP)
+        ) li
+        JOIN (
+            SELECT * FROM {t.orders} WHERE o_orderdate < CAST('1998-03-15' AS TIMESTAMP)
+        ) o ON li.l_orderkey = o.o_orderkey
+        JOIN (
+            SELECT c_custkey FROM {t.customer} WHERE c_mktsegment = 'BUILDING'
+        ) c ON o.o_custkey = c.c_custkey
+        GROUP BY o_orderkey, o_orderdate, o_orderpriority
+        ORDER BY revenue DESC, o_orderkey
+        LIMIT 10
+    """
 
 
 @register(
@@ -974,17 +1027,19 @@ def tpch_q3_shipping_priority(spark, sf_dir):
     """,
     tags=("analytics", "agg", "filter"),
 )
-def tpch_q6_discount_revenue(spark, sf_dir):
+@_sql
+def tpch_q6_discount_revenue(t):
     """TPC-H Q6: pure scan-filter-aggregate; every predicate reaches
     the parquet reader (date + two numeric ranges), result is a single
     row — the minimal-shuffle shape."""
-    li = _t(spark, sf_dir, "lineitem")
-    return li.filter(
-        (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
-        & F.col("l_discount").between(0.03, 0.07)
-        & (F.col("l_quantity") < 24)
-    ).agg(_money_sum(_m("l_extendedprice") * _r("l_discount"), "forecast_revenue"))
+    return f"""
+        SELECT {_money_sum_sql(_m("l_extendedprice") * _r("l_discount"))} AS forecast_revenue
+        FROM {t.lineitem}
+        WHERE l_shipdate >= CAST('1997-01-01' AS TIMESTAMP)
+          AND l_shipdate < CAST('1998-01-01' AS TIMESTAMP)
+          AND l_discount BETWEEN 0.03D AND 0.07D
+          AND l_quantity < 24
+    """
 
 
 @register(
@@ -1009,29 +1064,28 @@ def tpch_q6_discount_revenue(spark, sf_dir):
     """,
     tags=("analytics", "window", "sessionization"),
 )
-def sessionize_user_events(spark, sf_dir):
+@_sql
+def sessionize_user_events(t):
     """Sessionization: a session break is a >30 min gap per user.
     lag + conditional count over one window shuffle — the batch twin of
     streaming ``session_window``. Gap math in integer microseconds so
     both engines compare identically."""
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    e = _t(spark, sf_dir, "events")
-    return (
-        e.withColumn("prev_us", F.lag(F.unix_micros("ts")).over(w))
-        .withColumn(
-            "is_new",
-            F.when(
-                F.col("prev_us").isNull()
-                | ((F.unix_micros("ts") - F.col("prev_us")) > 1_800_000_000),
-                1,
-            ).otherwise(0),
+    return f"""
+        SELECT user_id, CAST(sum(is_new) AS BIGINT) AS n_sessions, count(1) AS n_events
+        FROM (
+            SELECT user_id,
+                   CASE WHEN prev_us IS NULL
+                             OR unix_micros(ts) - prev_us > 1800000000 THEN 1 ELSE 0 END AS is_new
+            FROM (
+                SELECT user_id, ts,
+                       lag(unix_micros(ts)) OVER (
+                           PARTITION BY user_id ORDER BY ts, event_id
+                       ) AS prev_us
+                FROM {t.events}
+            )
         )
-        .groupBy("user_id")
-        .agg(
-            F.sum("is_new").cast("bigint").alias("n_sessions"),
-            F.count(F.lit(1)).alias("n_events"),
-        )
-    )
+        GROUP BY user_id
+    """
 
 
 @register(
@@ -1057,7 +1111,8 @@ def sessionize_user_events(spark, sf_dir):
     """,
     tags=("analytics", "window", "asof"),
 )
-def asof_join_error_to_click(spark, sf_dir):
+@_sql
+def asof_join_error_to_click(t):
     """As-of join (Spark has no native one): for each error event, the
     most recent click by the same user at-or-before its timestamp.
     Composition: tag both sides, one union'd window with
@@ -1065,25 +1120,25 @@ def asof_join_error_to_click(spark, sf_dir):
     explosion; the classic scalable as-of pattern. Clicks sort before
     errors at equal timestamps (at-or-before semantics), event_id
     breaks remaining ties."""
-    e = _t(spark, sf_dir, "events").filter(F.col("event_type").isin("click", "error"))
-    tagged = e.select(
-        "user_id",
-        "ts",
-        "event_id",
-        F.when(F.col("event_type") == "click", F.col("event_id")).alias("click_id"),
-        F.when(F.col("event_type") == "click", F.lit(0)).otherwise(1).alias("kind_rank"),
-        "event_type",
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy(F.unix_micros("ts"), "kind_rank", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        tagged.withColumn("last_click_id", F.last("click_id", ignorenulls=True).over(w))
-        .filter(F.col("event_type") == "error")
-        .select("event_id", "user_id", "last_click_id")
-    )
+    return f"""
+        SELECT event_id, user_id, last_click_id
+        FROM (
+            SELECT event_type, event_id, user_id,
+                   last(click_id, true) OVER (
+                       PARTITION BY user_id
+                       ORDER BY unix_micros(ts), kind_rank, event_id
+                       ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+                   ) AS last_click_id
+            FROM (
+                SELECT user_id, ts, event_id,
+                       CASE WHEN event_type = 'click' THEN event_id END AS click_id,
+                       CASE WHEN event_type = 'click' THEN 0 ELSE 1 END AS kind_rank,
+                       event_type
+                FROM {t.events} WHERE event_type IN ('click', 'error')
+            )
+        )
+        WHERE event_type = 'error'
+    """
 
 
 @register(
@@ -1097,16 +1152,18 @@ def asof_join_error_to_click(spark, sf_dir):
     """,
     tags=("analytics", "agg", "percentile"),
 )
-def price_quantiles_by_brand(spark, sf_dir):
+@_sql
+def price_quantiles_by_brand(t):
     """Exact linear-interpolation percentiles per group (Spark
     ``percentile`` == DuckDB ``quantile_cont``). At extreme scale the
     drop-in is ``percentile_approx`` (t-digest sketch, no sort)."""
-    p = _t(spark, sf_dir, "part")
-    return p.groupBy("p_brand").agg(
-        F.round(F.percentile("p_retailprice", F.lit(0.25)), 4).alias("p25"),
-        F.round(F.percentile("p_retailprice", F.lit(0.5)), 4).alias("p50"),
-        F.round(F.percentile("p_retailprice", F.lit(0.75)), 4).alias("p75"),
-    )
+    return f"""
+        SELECT p_brand,
+               round(percentile(p_retailprice, 0.25D), 4) AS p25,
+               round(percentile(p_retailprice, 0.5D), 4) AS p50,
+               round(percentile(p_retailprice, 0.75D), 4) AS p75
+        FROM {t.part} GROUP BY p_brand
+    """
 
 
 @register(
@@ -1119,18 +1176,16 @@ def price_quantiles_by_brand(spark, sf_dir):
     """,
     tags=("analytics", "grouping-sets"),
 )
-def grouping_sets_quantity(spark, sf_dir):
+@_sql
+def grouping_sets_quantity(t):
     """Explicit GROUPING SETS through the SQL entry point (the Athena
     console equivalent surface)."""
-    _t(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_gs")
-    return spark.sql(
-        """
+    return f"""
         SELECT l_returnflag, l_linestatus, count(*) AS n,
                round(sum(l_quantity), 2) AS sum_qty
-        FROM lineitem_gs
+        FROM {t.lineitem}
         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-        """
-    )
+    """
 
 
 @register(
@@ -1143,19 +1198,16 @@ def grouping_sets_quantity(spark, sf_dir):
     """,
     tags=("analytics", "subquery"),
 )
-def in_subquery_big_spenders(spark, sf_dir):
+@_sql
+def in_subquery_big_spenders(t):
     """IN-subquery via the SQL surface; Catalyst rewrites to a
     left-semi join."""
-    _t(spark, sf_dir, "customer").createOrReplaceTempView("customer_sq")
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders_sq")
-    return spark.sql(
-        """
-        SELECT c_custkey, c_name FROM customer_sq
+    return f"""
+        SELECT c_custkey, c_name FROM {t.customer}
         WHERE c_custkey IN (
-            SELECT o_custkey FROM orders_sq WHERE o_totalprice > 400000
+            SELECT o_custkey FROM {t.orders} WHERE o_totalprice > 400000
         )
-        """
-    )
+    """
 
 
 @register(
@@ -1170,17 +1222,18 @@ def in_subquery_big_spenders(spark, sf_dir):
     """,
     tags=("analytics", "pivot"),
 )
-def pivot_event_type_counts(spark, sf_dir):
-    """Native ``.pivot()`` with an explicit value list (explicit values
-    skip the extra distinct-scan Spark otherwise needs — at 100 TB the
+@_sql
+def pivot_event_type_counts(t):
+    """Native PIVOT with an explicit value list (explicit values skip
+    the extra distinct-scan Spark otherwise needs — at 100 TB the
     value-discovery pass costs a full shuffle)."""
-    e = _t(spark, sf_dir, "events")
-    out = (
-        e.groupBy("user_id")
-        .pivot("event_type", ["click", "view", "error", "purchase"])
-        .agg(F.count(F.lit(1)))
-    )
-    return out.na.fill(0, ["click", "view", "error", "purchase"])
+    return f"""
+        SELECT user_id,
+               coalesce(click, 0) AS click, coalesce(`view`, 0) AS `view`,
+               coalesce(error, 0) AS error, coalesce(purchase, 0) AS purchase
+        FROM (SELECT user_id, event_type FROM {t.events})
+        PIVOT (count(1) FOR event_type IN ('click', 'view', 'error', 'purchase'))
+    """
 
 
 @register(
@@ -1200,19 +1253,23 @@ def pivot_event_type_counts(spark, sf_dir):
     """,
     tags=("analytics", "window", "date"),
 )
-def moving_avg_daily_orders(spark, sf_dir):
+@_sql
+def moving_avg_daily_orders(t):
     """Two-level: daily pre-aggregation (big shuffle shrinks the data
     to one row per day) then a 7-row moving-average frame over the tiny
     series — window state never sees raw rows."""
-    o = _t(spark, sf_dir, "orders")
-    daily = o.groupBy(F.date_trunc("day", "o_orderdate").alias("order_day")).agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        _exact_sum(_m("o_totalprice")).cast("double").alias("day_total"),
-    )
-    w = Window.orderBy("order_day").rowsBetween(-6, Window.currentRow)
-    return daily.select(
-        "order_day", "n_orders", F.round(F.avg("day_total").over(w), 4).alias("total_7d_avg")
-    )
+    return f"""
+        SELECT order_day, n_orders,
+               round(avg(day_total) OVER (
+                   ORDER BY order_day ROWS BETWEEN 6 PRECEDING AND CURRENT ROW
+               ), 4) AS total_7d_avg
+        FROM (
+            SELECT date_trunc('day', o_orderdate) AS order_day,
+                   count(1) AS n_orders,
+                   CAST({_exact_sum_sql(_m("o_totalprice"))} AS DOUBLE) AS day_total
+            FROM {t.orders} GROUP BY 1
+        )
+    """
 
 
 @register(
@@ -1229,22 +1286,21 @@ def moving_avg_daily_orders(spark, sf_dir):
     """,
     tags=("text", "similarity", "join"),
 )
-def ngram_jaccard_consecutive_docs(spark, sf_dir):
+@_sql
+def ngram_jaccard_consecutive_docs(t):
     """Exact token-set Jaccard between consecutive doc ids: the
     verification kernel of n-gram dedup, oracle-checked. (In the LSH
     pipeline this same expression runs only on candidate pairs.)"""
-    d = _t(spark, sf_dir, "documents")
-    toks = F.array_distinct(F.filter(F.split("text", " "), lambda t: t != ""))
-    sides = d.select("doc_id", toks.alias("toks"))
-    a = sides.alias("a")
-    b = sides.alias("b")
-    inter = F.size(F.array_intersect(F.col("a.toks"), F.col("b.toks"))).cast("double")
-    union = F.size(F.array_union(F.col("a.toks"), F.col("b.toks")))
-    return a.join(b, F.col("b.doc_id") == F.col("a.doc_id") + 1).select(
-        F.col("a.doc_id").alias("id_a"),
-        F.col("b.doc_id").alias("id_b"),
-        F.round(inter / union, 6).alias("jaccard"),
-    )
+    return f"""
+        WITH sides AS (
+            SELECT doc_id, array_distinct(filter(split(text, ' '), w -> w != '')) AS toks
+            FROM {t.documents}
+        )
+        SELECT a.doc_id AS id_a, b.doc_id AS id_b,
+               round(CAST(size(array_intersect(a.toks, b.toks)) AS DOUBLE)
+                     / size(array_union(a.toks, b.toks)), 6) AS jaccard
+        FROM sides a JOIN sides b ON b.doc_id = a.doc_id + 1
+    """
 
 
 # =====================================================================

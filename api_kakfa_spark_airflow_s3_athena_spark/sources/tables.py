@@ -18,6 +18,7 @@ extra scan at 100 TB); never infer.
 
 from __future__ import annotations
 
+import hashlib
 import os
 from typing import Iterable, Optional
 
@@ -30,6 +31,7 @@ from ..schemas import NAMES_STREAM, TESTDATA_TABLES
 __all__ = [
     "table_path",
     "load_table",
+    "TableViews",
     "load_tables",
     "read_parquet_metacached",
     "register_testdata_views",
@@ -83,10 +85,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
       to TIMESTAMP is value-preserving.
     - ``timestamp[us]`` UTC-adjusted: already a TIMESTAMP, untouched.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    # timestamp semantics (date_trunc/month/hour buckets) must be
-    # timezone-stable regardless of who built the session
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    _table_confs(spark)
     df = read_parquet_metacached(spark, table_path(sf_dir, name))
     for f in df.schema.fields:
         if f.name == "ts" and isinstance(f.dataType, T.LongType):
@@ -95,6 +94,60 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         elif f.name == "ts" and isinstance(f.dataType, T.TimestampNTZType):
             df = df.withColumn("ts", F.col("ts").cast(T.TimestampType()))
     return df
+
+
+def _table_confs(spark: SparkSession) -> None:
+    conf = spark.conf
+    conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    # timestamp semantics (date_trunc/month/hour buckets) must be
+    # timezone-stable regardless of who built the session
+    conf.set("spark.sql.session.timeZone", "UTC")
+
+
+# (applicationId, path) -> (mtime_ns, qualified view name); the same key
+# and invalidation as _SCHEMA_CACHE, one entry per path and application.
+_VIEW_CACHE: dict = {}
+
+
+class TableViews:
+    """SQL names for the testdata tables under ``sf_dir``: attribute
+    ``t.lineitem`` is a global temp view over :func:`load_table`'s
+    relation (ts normalisation included), for use in ``spark.sql`` text.
+
+    Each table's relation is resolved once per ``(applicationId, path)``
+    and re-resolved when the file's ``mtime_ns`` changes; a hit costs one
+    ``os.stat`` and no JVM call, where :func:`load_table` re-lists and
+    re-resolves the parquet relation each time. Global temp views belong
+    to the application, so the cloned session ``foreachBatch`` runs on
+    sees them too, and SQL may reference one view twice (``FROM v a JOIN
+    v b``). The scan keeps the creating session's file-split confs.
+
+    Constructing one sets :func:`load_table`'s session confs on ``spark``,
+    which the SQL built over the views needs as much as the reads."""
+
+    def __init__(self, spark: SparkSession, sf_dir: str):
+        _table_confs(spark)
+        self._spark = spark
+        self._sf_dir = sf_dir
+        self._app = spark.sparkContext.applicationId
+
+    def __getattr__(self, name: str) -> str:
+        if name.startswith("_"):
+            raise AttributeError(name)
+        path = table_path(self._sf_dir, name)
+        try:
+            mtime = os.stat(path).st_mtime_ns
+        except OSError:  # not a local path: resolve every time
+            mtime = None
+        key = (self._app, path)
+        hit = _VIEW_CACHE.get(key)
+        if hit is None or mtime is None or hit[0] != mtime:
+            view = f"{name}_{hashlib.sha1(path.encode()).hexdigest()[:16]}"
+            load_table(self._spark, self._sf_dir, name).createOrReplaceGlobalTempView(view)
+            db = self._spark.conf.get("spark.sql.globalTempDatabase")
+            hit = _VIEW_CACHE[key] = (mtime, f"{db}.{view}")
+        setattr(self, name, hit[1])
+        return hit[1]
 
 
 def read_parquet_metacached(spark: SparkSession, path: str) -> DataFrame:
@@ -127,10 +180,12 @@ def load_tables(spark: SparkSession, sf_dir: str, names: Optional[Iterable[str]]
 
 
 def register_testdata_views(spark: SparkSession, sf_dir: str) -> None:
-    """Expose every testdata table as a temp view so ``spark.sql`` works
-    exactly like the reference's Athena console entry point."""
+    """Expose every testdata table as a temp view under its own name so
+    ``spark.sql`` works exactly like the reference's Athena console entry
+    point; each aliases the table's :class:`TableViews` relation."""
+    t = TableViews(spark, sf_dir)
     for name in TESTDATA_TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
+        spark.table(getattr(t, name)).createOrReplaceTempView(name)
 
 
 def read_json_table(

@@ -123,3 +123,24 @@ def test_epoch_protocol_lives_only_in_the_epoch_store():
                 offenders.append(f"{fname}:{node.lineno}: {node.value!r}")
     assert not offenders, offenders
     assert os.path.exists(os.path.join(root, "epochs.py"))
+
+
+def test_temp_views_are_made_only_in_the_table_module():
+    """Only ``sources/tables.py`` creates temp views: SQL text names a
+    table through ``TableViews``, whose views are keyed by path and
+    file mtime, never through a fixed view name that a second fixture
+    dir or a rewritten file would silently rebind."""
+    root = os.path.dirname(pkg.__file__)
+    offenders = []
+    for path in _package_sources():
+        rel = os.path.relpath(path, root)
+        if rel == os.path.join("sources", "tables.py"):
+            continue
+        with open(path, encoding="utf-8") as fh:
+            tree = ast.parse(fh.read())
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Attribute) and re.fullmatch(
+                r"create(OrReplace)?(Global)?TempView", node.attr
+            ):
+                offenders.append(f"{rel}:{node.lineno}: .{node.attr}")
+    assert not offenders, offenders

@@ -98,3 +98,52 @@ def test_schema_cache_keeps_one_entry_per_rewritten_path(spark, tmp_path):
         assert tables.read_parquet_metacached(spark, path).columns == [f"c{i}"]
     keys = [k for k in tables._SCHEMA_CACHE if k[1] == path]
     assert keys == [(spark.sparkContext.applicationId, path)]
+
+
+def test_table_views_keep_each_sf_dir_apart(spark, sf_dir):
+    """Two fixture dirs in one session: each view reads its own file,
+    also when the dirs alternate."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from api_kakfa_spark_airflow_s3_athena_spark.sources.tables import TableViews, table_path
+
+    sf_next = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    for sf in (sf_dir, sf_next, sf_dir):
+        t = TableViews(spark, sf)
+        got = spark.sql(f"SELECT count(*) AS c FROM {t.lineitem}").collect()[0].c
+        assert got == pq.ParquetFile(table_path(sf, "lineitem")).metadata.num_rows, sf
+
+
+def test_table_views_reresolve_a_rewritten_table(spark, sf_dir, tmp_path):
+    """A table file rewritten in place (new mtime) shows its new rows on
+    the next build of a registry query over it."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from api_kakfa_spark_airflow_s3_athena_spark.plans.queries import REGISTRY
+    from api_kakfa_spark_airflow_s3_athena_spark.sources.tables import table_path
+
+    customer = pq.read_table(table_path(sf_dir, "customer"))
+    path = table_path(str(tmp_path), "customer")
+    q1 = REGISTRY["athena_q1_topk_scan"].fn
+    for i, n in enumerate((3, 5)):
+        pq.write_table(customer.slice(0, n), path)
+        os.utime(path, ns=(i + 1, i + 1))  # distinct mtimes, coarse clocks too
+        assert len(q1(spark, str(tmp_path)).collect()) == n
+
+
+def test_sql_surface_runs_on_a_new_session(spark, sf_dir):
+    """``foreachBatch`` hands its function a cloned session: the views
+    the first session made resolve there, and the build sets the table
+    confs the text needs (UTC date bounds) on that session."""
+    from api_kakfa_spark_airflow_s3_athena_spark.plans.queries import REGISTRY
+
+    other = spark.newSession()
+    other.conf.set("spark.sql.session.timeZone", "America/Los_Angeles")
+    for name in ("athena_q6_partition_pruned_agg", "revenue_by_nation"):
+        got = REGISTRY[name].fn(other, sf_dir).collect()
+        assert sorted(got) == sorted(REGISTRY[name].fn(spark, sf_dir).collect()), name
+    assert other.conf.get("spark.sql.session.timeZone") == "UTC"
